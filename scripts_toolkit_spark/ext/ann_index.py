@@ -10,11 +10,11 @@ family:
 
     {path}/centroids   (cell_id int, centroid array<double>)   — KB model
     {path}/codebook    (s int, code int, csub array<double>)   — optional PQ model
-    {path}/meta        (n_home int, residual boolean,
-                        two_level boolean, super_probe int)    — one-row config
-                       (two_level, r12: the store assigns/probes
-                       coarse-to-fine past the flat-codebook cap — see
-                       build_ann_index)
+    {path}/meta        one-row config (`_CONTROL_SCHEMAS["meta"]`: n_home,
+                       residual, the seeded-PQ params, two_level,
+                       super_probe, the realized n_cells/dim) — absent
+                       only on a store whose /centroids a stream's caller
+                       wrote directly, which reads every default
     {path}/vectors     (vec_id, embedding array<double> UNIT-NORM, cell_id,
                        probe_rank int) — the encoded corpus; one row per
                        STORED COPY (`n_home` > 1 spills each vector into
@@ -25,21 +25,19 @@ family:
                        `batch_id < current` filter and the staleness
                        report read the same store the batch builder wrote
     {path}/codes       (vec_id, ncodes array<int>, cell_id, probe_rank)
-                       — optional PQ-compressed corpus; kept row-parity
-                       with /vectors by `append_to_index` (late batches
-                       are encoded with the STORED codebook). PLAIN codes
-                       are cell-independent (spilled copies carry
-                       identical ncodes); RESIDUAL codes (meta residual =
-                       true, r11 — the round-10 verdict Next #1 port) are
-                       PER STORED COPY: each copy encodes v − c(the cell
-                       it is stored in), the FAISS-default encoding that
-                       lifts the stored index to the composed best-recall
-                       configuration. Since r11 also PARTITIONED BY
-                       batch_id (mirror of /vectors) so the streaming
-                       ingester's compressed-domain match gets the same
-                       exactly-once per-partition overwrite; pre-r11
-                       unpartitioned stores keep working (appends detect
-                       the layout).
+                       — optional PQ-compressed corpus, present exactly
+                       when /codebook is; kept row-parity with /vectors by
+                       `append_to_index` (late batches are encoded with the
+                       STORED codebook). PLAIN codes are cell-independent
+                       (spilled copies carry identical ncodes); RESIDUAL
+                       codes (meta residual = true, r11 — the round-10
+                       verdict Next #1 port) are PER STORED COPY: each copy
+                       encodes v − c(the cell it is stored in), the
+                       FAISS-default encoding that lifts the stored index
+                       to the composed best-recall configuration.
+                       PARTITIONED BY batch_id like /vectors, so the
+                       streaming ingester's compressed-domain match gets
+                       the same exactly-once per-partition overwrite.
 
 Design rules
 - Vectors are stored L2-NORMALIZED, so search cosine = plain dot
@@ -62,6 +60,9 @@ Design rules
 - The model frames are KB-scale control plane (√N cells); the corpus
   frame is the only SF-linear table and it is written/read as plain
   parquet — partition pruning and pushdown apply as for any table.
+- Control-plane IO goes through one seam (`read_rows` / `write_rows` /
+  `batch_ids` / `row_count`), which picks driver-side pyarrow for a local
+  store (zero Spark jobs) and Spark IO for an hdfs:// or s3a:// one.
 - Lifecycle: `index_health` (staleness report: occupancy skew +
   appended-since-train fraction, one scan), `compact_index` (merge append
   partitions, model untouched), `delete_from_index` (anti-join /vectors +
@@ -73,9 +74,14 @@ Design rules
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.window import Window
 
 from scripts_toolkit_spark.ext.similarity import (
@@ -97,6 +103,33 @@ from scripts_toolkit_spark.ext.similarity import (
 )
 from scripts_toolkit_spark.materialize import materialize as _materialize
 
+# One schema per KB control file. The Spark schema derives from it, so a
+# file written by either IO implementation below reads back identical.
+_CONTROL_SCHEMAS = {
+    "meta": pa.schema(
+        [
+            ("n_home", pa.int32()),
+            ("residual", pa.bool_()),
+            ("pq_seeded", pa.bool_()),
+            ("pq_n_codes", pa.int32()),
+            ("m", pa.int32()),
+            ("sub_dim", pa.int32()),
+            ("two_level", pa.bool_()),
+            ("super_probe", pa.int32()),
+            ("n_cells", pa.int64()),
+            ("dim", pa.int32()),
+        ]
+    ),
+    "centroids": pa.schema([("cell_id", pa.int32()), ("centroid", pa.list_(pa.float64()))]),
+    "codebook": pa.schema(
+        [("s", pa.int32()), ("code", pa.int32()), ("csub", pa.list_(pa.float64()))]
+    ),
+}
+
+
+def _spark_schema(name: str):
+    return from_arrow_schema(_CONTROL_SCHEMAS[name])
+
 
 def _local_fs_path(path: str) -> str | None:
     """The filesystem path when `path` addresses the LOCAL filesystem (a
@@ -106,9 +139,7 @@ def _local_fs_path(path: str) -> str | None:
     Spark jobs) instead of scheduling a distributed job per touch
     (guide §5 driver round-trips; r15 — round-14 verdict Next #3: a
     warm two-level-residual lifecycle ran ~46 jobs at 20-450 ms, a
-    large slice of them exactly these KB model reads/writes). A store
-    on HDFS/object storage keeps the Spark IO path unchanged — the
-    fallback every helper below carries."""
+    large slice of them exactly these KB model reads/writes)."""
     if path.startswith("file://"):
         return path[len("file://") :]
     if "://" in path:
@@ -116,220 +147,129 @@ def _local_fs_path(path: str) -> str | None:
     return path
 
 
-def _pa_read_rows(fs_path: str) -> list[dict]:
-    """Driver-side parquet read of a KB control-plane dir (or single
-    file): list of row dicts in file order. Raises FileNotFoundError
-    when absent — the caller maps that to its missing-store semantics."""
-    import os
+class _ArrowStoreIO:
+    """A local store's control plane: driver-side pyarrow, zero Spark
+    jobs. Writes are single-file (<dir>/part-00000.parquet, overwrite)."""
 
-    import pyarrow.parquet as pq
+    def __init__(self, root: str):
+        self.root = root
 
-    if os.path.isfile(fs_path):
-        files = [fs_path]
-    elif os.path.isdir(fs_path):
-        files = sorted(
-            os.path.join(fs_path, f)
-            for f in os.listdir(fs_path)
+    def listdir(self, name: str) -> list[str]:
+        d = os.path.join(self.root, name)
+        return sorted(os.listdir(d)) if os.path.isdir(d) else []
+
+    def _files(self, name: str) -> list[str]:
+        return [
+            os.path.join(self.root, name, f)
+            for f in self.listdir(name)
             if f.endswith(".parquet")
+        ]
+
+    def read_rows(self, name: str) -> list[dict] | None:
+        if not os.path.isdir(os.path.join(self.root, name)):
+            return None
+        return [r for f in self._files(name) for r in pq.read_table(f).to_pylist()]
+
+    def row_count(self, name: str) -> int:
+        # footer metadata only: a two-level store's /centroids is
+        # √N-scale, never read whole for a count
+        return sum(pq.read_metadata(f).num_rows for f in self._files(name))
+
+    def write_rows(self, name: str, rows: list[tuple]) -> None:
+        d = os.path.join(self.root, name)
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        schema = _CONTROL_SCHEMAS[name]
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
         )
-    else:
-        raise FileNotFoundError(fs_path)
-    rows: list[dict] = []
-    for f in files:
-        rows.extend(pq.read_table(f).to_pylist())
-    return rows
+        pq.write_table(table, os.path.join(d, "part-00000.parquet"))
 
 
-def _pa_write_rows(fs_path: str, rows: list[tuple], pa_schema) -> None:
-    """Driver-side single-file parquet write of a KB control-plane frame
-    (overwrite semantics, Spark-readable layout: <dir>/part-00000.parquet).
-    Types in `pa_schema` must mirror the Spark schema the distributed
-    fallback writes, so a store written either way reads back identical."""
-    import os
-    import shutil
+class _SparkStoreIO:
+    """A remote store's control plane (hdfs://, s3a://, ...): Spark reads
+    and one-slice literal writes; existence and listings come from the
+    Hadoop FileSystem driver-side (no job)."""
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark, self.root = spark, root
 
-    shutil.rmtree(fs_path, ignore_errors=True)
-    os.makedirs(fs_path, exist_ok=True)
-    cols = list(zip(*rows)) if rows else [[] for _ in pa_schema]
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
-        schema=pa_schema,
-    )
-    pq.write_table(table, os.path.join(fs_path, "part-00000.parquet"))
+    def _fs(self, name: str):
+        sc = self.spark.sparkContext
+        p = sc._jvm.org.apache.hadoop.fs.Path(f"{self.root}/{name}")
+        return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
 
+    def listdir(self, name: str) -> list[str]:
+        fs, p = self._fs(name)
+        return sorted(s.getPath().getName() for s in fs.listStatus(p)) if fs.exists(p) else []
 
-def _meta_pa_schema():
-    import pyarrow as pa
+    def read_rows(self, name: str) -> list[dict] | None:
+        fs, p = self._fs(name)
+        if not fs.exists(p):
+            return None
+        df = self.spark.read.parquet(f"{self.root}/{name}")
+        return [r.asDict(recursive=True) for r in df.collect()]
 
-    return pa.schema(
-        [
-            pa.field("n_home", pa.int32()),
-            pa.field("residual", pa.bool_()),
-            pa.field("pq_seeded", pa.bool_()),
-            pa.field("pq_n_codes", pa.int32()),
-            pa.field("m", pa.int32()),
-            pa.field("sub_dim", pa.int32()),
-            pa.field("two_level", pa.bool_()),
-            pa.field("super_probe", pa.int32()),
-            pa.field("n_cells", pa.int64()),
-            pa.field("dim", pa.int32()),
-        ]
-    )
+    def row_count(self, name: str) -> int:
+        return self.spark.read.parquet(f"{self.root}/{name}").count()
+
+    def write_rows(self, name: str, rows: list[tuple]) -> None:
+        local_rows_df(self.spark, rows, _spark_schema(name)).write.mode(
+            "overwrite"
+        ).parquet(f"{self.root}/{name}")
 
 
-_META_SPARK_SCHEMA = (
-    "n_home int, residual boolean, pq_seeded boolean, "
-    "pq_n_codes int, m int, sub_dim int, "
-    "two_level boolean, super_probe int, "
-    "n_cells bigint, dim int"
-)
+def _store_io(spark: SparkSession, path: str):
+    """The ONE local-vs-remote decision for the store at `path`."""
+    lp = _local_fs_path(path)
+    return _ArrowStoreIO(lp) if lp is not None else _SparkStoreIO(spark, path)
 
 
-def _write_meta(spark: SparkSession, path: str, vals: tuple) -> None:
-    """Persist the one-row {path}/meta config: driver-side pyarrow write
-    on a local store (zero Spark jobs — the row is driver-held by
-    construction), the one-slice literal Spark write elsewhere. Column
-    names/types identical either way (pinned by
-    test_ann_store_local_control_files)."""
-    lp = _local_fs_path(path + "/meta")
-    if lp is not None:
-        _pa_write_rows(lp, [vals], _meta_pa_schema())
-        return
-    local_rows_df(spark, [vals], _META_SPARK_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(path + "/meta")
+def read_rows(spark: SparkSession, path: str, name: str) -> list[dict] | None:
+    """Rows of the control file {path}/{name} as dicts; None when absent."""
+    return _store_io(spark, path).read_rows(name)
 
 
-def _centroids_pa_schema():
-    import pyarrow as pa
+def write_rows(spark: SparkSession, path: str, name: str, rows: list[tuple]) -> None:
+    """Overwrite the control file {path}/{name} with `rows`, tuples in
+    `_CONTROL_SCHEMAS[name]` field order."""
+    _store_io(spark, path).write_rows(name, rows)
 
-    return pa.schema(
-        [
-            pa.field("cell_id", pa.int32()),
-            pa.field("centroid", pa.list_(pa.float64())),
-        ]
+
+def row_count(spark: SparkSession, path: str, name: str) -> int:
+    """Row count of {path}/{name} — parquet footers on a local store, one
+    count job on a remote one."""
+    return _store_io(spark, path).row_count(name)
+
+
+def batch_ids(spark: SparkSession, path: str) -> list[int]:
+    """Ascending batch ids held by {path}/vectors, read off its batch_id=N
+    partition directories (r15: a listing, not a scan job); [] when the
+    corpus is not written yet."""
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in _store_io(spark, path).listdir("vectors")
+        if d.startswith("batch_id=")
     )
 
 
-def _codebook_pa_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("s", pa.int32()),
-            pa.field("code", pa.int32()),
-            pa.field("csub", pa.list_(pa.float64())),
-        ]
-    )
-
-
-def _next_batch_id(spark: SparkSession, path: str) -> int:
-    """max(batch_id) + 1 over {path}/vectors. The corpus is PARTITIONED
-    BY batch_id, so on a local store the answer is a directory listing
-    (r15 — the former F.max aggregate scheduled a full scan job per
-    append for a value the layout already encodes; at any scale the
-    batch ids are the partition directory names). Falls back to the
-    Spark aggregate for non-local stores or a legacy unpartitioned
-    layout."""
-    import os
-
-    lp = _local_fs_path(path + "/vectors")
-    if lp is not None and os.path.isdir(lp):
-        ids = []
-        for d in os.listdir(lp):
-            if d.startswith("batch_id="):
-                try:
-                    ids.append(int(d.split("=", 1)[1]))
-                except ValueError:
-                    pass
-        if ids:
-            return max(ids) + 1
-    prev_max = spark.read.parquet(path + "/vectors").agg(F.max("batch_id")).first()[0]
-    return int(prev_max) + 1 if prev_max is not None else 0
-
-
-def _codebook_frame(spark: SparkSession, path: str) -> DataFrame | None:
-    """{path}/codebook as a lazy frame, None for an IVF-only store. On a
-    local store the existence probe is an os.path check (r15); the read
-    itself is lazy either way (schema comes from the footer driver-side)."""
-    import os
-
-    lp = _local_fs_path(path + "/codebook")
-    if lp is not None:
-        return spark.read.parquet(path + "/codebook") if os.path.isdir(lp) else None
-    try:
-        return spark.read.parquet(path + "/codebook")
-    except AnalysisException:  # IVF-only index: no PQ model to keep in sync
-        return None
-
-
-def _centroids_shape_from_files(path: str) -> tuple[int, int] | None:
-    """(n_rows, dim) of {path}/centroids straight from the parquet FILES
-    on a local store (r15): row count from the footers' metadata (no
-    data read), dim from one centroid of one file — driver-side
-    milliseconds replacing the 25-task `corpus_stats` scan the two-level
-    build/retrain pays right after writing the frame. None → caller
-    falls back to the distributed stats job (non-local store)."""
-    import os
-
-    lp = _local_fs_path(path + "/centroids")
-    if lp is None or not os.path.isdir(lp):
-        return None
-    import pyarrow.parquet as pq
-
-    files = sorted(
-        os.path.join(lp, f) for f in os.listdir(lp) if f.endswith(".parquet")
-    )
-    if not files:
-        return None
-    n_rows = 0
-    dim = None
-    for f in files:
-        md = pq.read_metadata(f)
-        if md.num_rows and dim is None:
-            # stream ONE batch of one column — never the whole file (a
-            # two-level store's /centroids is √N-scale, not KB)
-            for batch in pq.ParquetFile(f).iter_batches(
-                batch_size=16, columns=["centroid"]
-            ):
-                for v in batch.column(0):
-                    if v.is_valid:
-                        dim = len(v.as_py())
-                        break
-                if dim is not None:
-                    break
-        n_rows += md.num_rows
-    if dim is None:
-        return None
-    return n_rows, dim
+def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
+    """Persist the one-row {path}/meta from a dict keyed by its schema's
+    field names (a missing key writes null, which decodes to its default)."""
+    names = _CONTROL_SCHEMAS["meta"].names
+    write_rows(spark, path, "meta", [tuple(meta.get(f) for f in names)])
 
 
 def _meta_dict(spark: SparkSession, path: str) -> dict:
-    """The raw one-row {path}/meta contents as a dict ({} when the store
-    predates meta or the row is absent) — ONE read per lifecycle verb
-    (r14: search/append/retrain each used to schedule 2-3 separate meta
-    jobs through the per-knob helpers below; the knob decoding is
-    driver-side and shares this single read). On a local store the read
-    is a driver-side pyarrow touch — no Spark job at all (r15)."""
-    lp = _local_fs_path(path + "/meta")
-    if lp is not None:
-        try:
-            rows = _pa_read_rows(lp)
-        except FileNotFoundError:
-            return {}
-        return rows[0] if rows else {}
-    try:
-        row = spark.read.parquet(path + "/meta").first()
-    except AnalysisException:
-        return {}
-    return row.asDict() if row is not None else {}
+    """The raw one-row {path}/meta contents as a dict ({} for a store
+    with no meta) — ONE read per lifecycle verb (r14), driver-side on a
+    local store (r15); the knob decoding below shares it."""
+    rows = read_rows(spark, path, "meta")
+    return rows[0] if rows else {}
 
 
 def _meta_n_home_residual(d: dict) -> tuple[int, bool]:
-    return int(d.get("n_home", 1) or 1), bool(d.get("residual") or False)
+    return int(d.get("n_home") or 1), bool(d.get("residual") or False)
 
 
 def _meta_two_level(d: dict) -> tuple[bool, int]:
@@ -338,8 +278,7 @@ def _meta_two_level(d: dict) -> tuple[bool, int]:
     # degenerate probe width — ivf_assign(n_probe=0) silently returns no
     # rows. Build validates >= 1; a hand-written meta with a non-positive
     # width falls back to the documented DEFAULT (4), not a clamp to 1
-    # (advisor r13: clamping silently narrowed routing/recall for
-    # degenerate metas where the pre-r12 expression used the default).
+    # (advisor r13: clamping silently narrowed routing/recall).
     return bool(d.get("two_level") or False), int(sp) if sp is not None and int(sp) >= 1 else 4
 
 
@@ -349,9 +288,8 @@ def _meta_shape(d: dict) -> tuple[int | None, int | None]:
     `corpus_stats` job over {path}/centroids. n_cells is the REALIZED
     row count (a two-level store's `n_super = ceil(sqrt(n_cells))`
     derives from it — an expectation would change the super pick and the
-    results). Stores written before the columns existed read
-    (None, None) — the callers fall back to the stats job, exactly the
-    pre-r14 behavior."""
+    results). A store with no meta reads (None, None): the callers run
+    the stats job instead."""
     nc, dm = d.get("n_cells"), d.get("dim")
     return (
         int(nc) if nc is not None and int(nc) > 0 else None,
@@ -363,42 +301,6 @@ def _meta_seeded_pq(d: dict):
     if not d.get("pq_seeded"):
         return False, None, None, None
     return True, int(d["pq_n_codes"]), int(d["m"]), int(d["sub_dim"])
-
-
-def _index_meta(spark: SparkSession, path: str) -> tuple[int, bool]:
-    """(n_home, residual) — the stored index's spilled-assignment width
-    (1 = classic single home) and PQ-encoding mode (False = plain codes).
-    Read from {path}/meta; stores written before each knob existed (e.g.
-    a stream started against directly-written centroids, or an r10 store
-    predating the residual port) default to (1, False) — exactly the
-    pre-knob behavior."""
-    return _meta_n_home_residual(_meta_dict(spark, path))
-
-
-def _index_n_home(spark: SparkSession, path: str) -> int:
-    """Spilled width only (kept: the streaming ingester's raw-vector path
-    needs no PQ mode)."""
-    return _index_meta(spark, path)[0]
-
-
-def _index_two_level(spark: SparkSession, path: str) -> tuple[bool, int]:
-    """(two_level, super_probe) — whether the store routes assignment
-    coarse-to-fine past the flat literal-codebook cap (r12 — round-11
-    verdict "What's missing" #1: the extreme-N escape hatch must be an
-    INDEX property every lifecycle verb honors, not an ad-hoc-only
-    chain). Stores written before the knob existed read (False, 4) —
-    exactly the flat pre-r12 behavior."""
-    return _meta_two_level(_meta_dict(spark, path))
-
-
-def _index_seeded_pq_meta(spark: SparkSession, path: str):
-    """(pq_seeded, pq_n_codes, m, sub_dim) — recorded when the build
-    SELF-CONSTRUCTED the seeded residual codebook, so `retrain_index`
-    can rebuild that codebook from the NEW pick (retrain == fresh seeded
-    build extends to residual stores). Stores with a caller-provided
-    codebook — or written before this column existed — read
-    (False, None, None, None): retrain keeps their stored codebook."""
-    return _meta_seeded_pq(_meta_dict(spark, path))
 
 
 def _seeded_residual_model(
@@ -417,31 +319,23 @@ def _seeded_residual_model(
     pick is a prefix property) AND the seeded residual codebook
     (`seeded_residual_codebook_rows`, the exact `ivfpq_topk`
     construction). Shared by `build_ann_index(residual=True)` and the
-    seeded-store branch of `retrain_index`. KB control plane. r14: the
-    pick rows come straight from `exact_pick_rows` (the former shape
-    created the pick frame and re-collected it — an extra job for rows
-    the driver already held), both frames are ONE-slice literals, and
-    the centroid rows are returned so the caller's assign/encode legs
-    skip their own re-collect. r15: the codebook ROWS are returned too,
-    so a local store's /codebook write and the build's own encode leg
-    never re-collect the literal frame."""
-    import numpy as np
-
+    seeded-store branch of `retrain_index`, which persist the ROWS
+    through the control-plane seam; the one-slice literal frames serve
+    callers composing an ad-hoc model. KB control plane."""
     big_rows = exact_pick_rows(
         normed, max(n_cells, n_codes), id_col, vec_col, n_rows=n_rows
     )
     cent_rows = [(c, v) for c, v in big_rows if c < n_cells]
-    centroids = local_rows_df(
-        spark, cent_rows, "cell_id int, centroid array<double>"
-    )
-    cent_np = np.asarray([v for _c, v in cent_rows], dtype=np.float64)
     cb_rows = seeded_residual_codebook_rows(
-        [(c, v) for c, v in big_rows if c < n_codes], cent_np, m, sub_dim
+        [(c, v) for c, v in big_rows if c < n_codes],
+        _cent_np_pos_from_rows(cent_rows)[0], m, sub_dim,
     )
-    codebook = local_rows_df(
-        spark, cb_rows, "s int, code int, csub array<double>"
+    return (
+        local_rows_df(spark, cent_rows, _spark_schema("centroids")),
+        local_rows_df(spark, cb_rows, _spark_schema("codebook")),
+        cent_rows,
+        cb_rows,
     )
-    return centroids, codebook, cent_rows, cb_rows
 
 
 def _codebook_from_rows(cb_rows: list):
@@ -458,70 +352,48 @@ def _codebook_from_rows(cb_rows: list):
     return cb_np, m, n_codes, sub_dim
 
 
-def _collect_codebook(codebook: DataFrame):
-    """(cb_np, m, n_codes, sub_dim) from a (s, code, csub) frame — the
-    same sorted-collect layout `ivfpq_topk` builds, so kernel LUT/code
-    arithmetic is bit-identical across the stored and ad-hoc paths. KB
-    control plane."""
-    return _codebook_from_rows(
-        [(int(r["s"]), int(r["code"]), list(r["csub"])) for r in codebook.collect()]
+def _codebook_rows(spark: SparkSession, path: str) -> list | None:
+    """Raw (s, code, csub) tuples of {path}/codebook; None for an IVF-only
+    store (no PQ model, no /codes)."""
+    rows = read_rows(spark, path, "codebook")
+    if rows is None:
+        return None
+    return [(int(r["s"]), int(r["code"]), list(r["csub"])) for r in rows]
+
+
+def _centroid_rows(centroids: DataFrame) -> list:
+    """cell_id-sorted [(cell_id, [float])] rows of a centroid frame (one
+    collect)."""
+    return sorted(
+        (int(r["cell_id"]), list(r["centroid"]))
+        for r in centroids.select("cell_id", "centroid").collect()
     )
-
-
-def _codebook_rows_from_store(path: str) -> list | None:
-    """Raw (s, code, csub) tuples of {path}/codebook via a driver-side
-    pyarrow read on a local store (zero Spark jobs, r15); None when the
-    store is non-local or has no codebook — callers fall back to the
-    Spark frame path."""
-    lp = _local_fs_path(path + "/codebook")
-    if lp is None:
-        return None
-    try:
-        raw = _pa_read_rows(lp)
-    except FileNotFoundError:
-        return None
-    return [(int(r["s"]), int(r["code"]), list(r["csub"])) for r in raw]
-
-
-def _collect_codebook_store(spark: SparkSession, path: str):
-    """(cb_np, m, n_codes, sub_dim) straight from {path}/codebook —
-    pyarrow driver-side on a local store (zero Spark jobs, r15), Spark
-    read + collect elsewhere. Same doubles either way (parquet and
-    collect both round-trip IEEE binary64 exactly)."""
-    rows = _codebook_rows_from_store(path)
-    if rows is not None:
-        return _codebook_from_rows(rows)
-    return _collect_codebook(spark.read.parquet(path + "/codebook"))
 
 
 def _centroid_rows_from_store(spark: SparkSession, path: str, meta: dict):
     """cell_id-sorted [(cell_id, [float])] rows of {path}/centroids when
-    the store is FLAT (not two-level), the realized model fits the
-    literal-kernel cap, and the store is on the local filesystem — the
-    driver-side read that lets every later `ivf_assign` skip its own
-    collect job (r15). None otherwise: two-level stores never collect
-    centroids (that is their contract), over-cap models route to the
-    broadcast fallback, and non-local stores keep the Spark path."""
+    the store is FLAT (not two-level) and the realized model fits the
+    literal-kernel cap — the read that lets every later `ivf_assign`
+    skip its own collect job (r15; driver-side on a local store). None
+    otherwise: two-level stores never collect centroids (that is their
+    contract), over-cap models route to the broadcast fallback, and a
+    store with no meta has no recorded shape to check the cap against."""
     two_level, _sp = _meta_two_level(meta)
     n_cells, dim = _meta_shape(meta)
     if two_level or n_cells is None or dim is None:
         return None
     if n_cells * dim > _IVF_LITERAL_MAX_DOUBLES:
         return None
-    lp = _local_fs_path(path + "/centroids")
-    if lp is None:
+    rows = read_rows(spark, path, "centroids")
+    if rows is None:
         return None
-    try:
-        raw = _pa_read_rows(lp)
-    except FileNotFoundError:
-        return None
-    return sorted((int(r["cell_id"]), list(r["centroid"])) for r in raw)
+    return sorted((int(r["cell_id"]), list(r["centroid"])) for r in rows)
 
 
 def _cent_np_pos_from_rows(cent_rows: list):
-    """(cent_np, cent_pos) from cell-sorted [(cell_id, [float])] rows —
-    the `_collect_centroids` layout without its collect job, for callers
-    that already hold the rows (pyarrow store read, exact pick)."""
+    """(cent_np, cent_pos) from cell-sorted [(cell_id, [float])] rows:
+    the cell_id-ascending centroid matrix + the cell_id → row-position
+    map the residual kernel indexes by (`ivfpq_topk`'s construction)."""
     import numpy as np
 
     cent_np = np.asarray([v for _c, v in cent_rows], dtype=np.float64)
@@ -530,68 +402,78 @@ def _cent_np_pos_from_rows(cent_rows: list):
 
 
 def _collect_centroids(centroids: DataFrame):
-    """(cent_np, cent_pos): the cell_id-ascending centroid matrix + the
-    cell_id → row-position map the residual kernel indexes by. Same
-    construction as `ivfpq_topk`'s one model collect."""
-    import numpy as np
+    """(cent_np, cent_pos) of a centroid frame — one collect."""
+    return _cent_np_pos_from_rows(_centroid_rows(centroids))
 
-    cent_rows = sorted(
-        (int(r["cell_id"]), list(r["centroid"]))
-        for r in centroids.select("cell_id", "centroid").collect()
+
+def _assign_stored(
+    vectors: DataFrame,
+    cents: DataFrame,
+    n_probe: int,
+    meta: dict,
+    cent_rows: list | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Rank-annotated assignment of unit vectors against the STORED model,
+    routed by the store's meta: coarse-to-fine on a two-level store
+    (r12 — never collects the centroid set), the literal-codebook kernel
+    otherwise (`cent_rows` when the caller holds them skip its collect).
+    The meta shape skips the per-call stats job (r14)."""
+    two_level, super_probe = _meta_two_level(meta)
+    n_cells, dim = _meta_shape(meta)
+    if two_level:
+        return ivf_assign_two_level(
+            vectors, cents, super_probe=super_probe, n_probe=n_probe,
+            id_col=id_col, vec_col=vec_col, with_rank=True,
+            n_cells=n_cells, dim=dim,
+        )
+    return ivf_assign(
+        vectors, cents, n_probe, id_col, vec_col, with_rank=True,
+        n_cells=n_cells, dim=dim, centroid_rows=cent_rows,
     )
-    cent_np = np.asarray([v for _c, v in cent_rows], dtype=np.float64)
-    cent_pos = {c: i for i, (c, _v) in enumerate(cent_rows)}
-    return cent_np, cent_pos
-
-
-def _with_probe_rank(df: DataFrame) -> DataFrame:
-    """Upgrade shim (advisor r10): a store written before the spill port
-    (r10) has no probe_rank column — it is single-home by construction,
-    so every row is rank 1 (mirrors the n_home=1 meta default). Lifecycle
-    verbs read through this so pre-r10 stores keep working."""
-    if "probe_rank" in df.columns:
-        return df
-    return df.withColumn("probe_rank", F.lit(1).cast("int"))
 
 
 def _encode_codes(
     stored: DataFrame,
-    sub_codebook: DataFrame,
+    path: str,
+    cb_rows: list,
+    meta: dict,
+    cents: DataFrame,
+    cent_rows: list | None,
     id_col: str,
     vec_col: str,
-    m: int | None = None,
-    sub_dim: int | None = None,
 ) -> DataFrame:
-    """PQ-encode the stored corpus: codes come from HOME rows only (plain
-    PQ codes are cell-independent, so every spilled copy of a vector
-    carries identical ncodes — encoding once per vector, not per copy),
-    then fan back out to one codes row PER STORED COPY so /codes keeps
-    row-parity with /vectors on both search paths. Pass `m`/`sub_dim`
-    when the caller already holds the codebook shape (r15) to skip the
-    stats job."""
-    if m is None or sub_dim is None:
-        # ONE stats job for the model shape (r14: max(s) and the first csub
-        # used to schedule two separate driver jobs over the KB codebook)
-        shape = sub_codebook.agg(
-            F.max("s").alias("__m"), F.first("csub", ignorenulls=True).alias("__c")
-        ).first()
-        m = int(shape["__m"]) + 1
-        sub_dim = len(shape["__c"])
+    """PQ-encode stored rows (id, vec, cell_id, probe_rank) against the
+    store's codebook rows, in the encoding its meta records. PLAIN codes
+    come from HOME rows only (they are cell-independent, so every
+    spilled copy of a vector carries identical ncodes — encoding once
+    per vector, not per copy), then fan back out to one codes row PER
+    STORED COPY so /codes keeps row-parity with /vectors on both search
+    paths; the encode joins the stored {path}/codebook frame. RESIDUAL
+    codes are per copy (`_encode_codes_residual`)."""
+    residual = _meta_n_home_residual(meta)[1]
+    if residual:
+        return _encode_codes_residual(
+            stored, cb_rows, cents, id_col, vec_col,
+            distributed=_meta_two_level(meta)[0], cent_rows=cent_rows,
+        )
+    _cb_np, m, _n_codes, sub_dim = _codebook_from_rows(cb_rows)
+    codebook = stored.sparkSession.read.parquet(path + "/codebook")
     home = stored.where(F.col("probe_rank") == 1).select(id_col, vec_col)
-    return pq_code_arrays(home, sub_codebook, m, sub_dim, id_col, vec_col).join(
+    return pq_code_arrays(home, codebook, m, sub_dim, id_col, vec_col).join(
         stored.select(id_col, "cell_id", "probe_rank"), id_col
     )
 
 
 def _encode_codes_residual(
     stored: DataFrame,
-    codebook: DataFrame,
+    cb_rows: list,
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
     distributed: bool = False,
     cent_rows: list | None = None,
-    codebook_rows: list | None = None,
 ) -> DataFrame:
     """RESIDUAL-PQ encode the stored corpus (r11 — round-10 verdict Next
     #1): unlike plain codes (cell-independent, encoded once per vector
@@ -601,7 +483,8 @@ def _encode_codes_residual(
     (`attach_pq_lut` residual mode, np first-occurrence argmin == the
     (d2 asc, code asc) comparator) → bit-identical ncodes to the ad-hoc
     path for the same (vector, cell, model). `stored` must carry
-    (id, vec, cell_id, probe_rank); the codebook is KB control plane.
+    (id, vec, cell_id, probe_rank); the codebook rows are KB control
+    plane, held driver-side by every caller (r15).
 
     `distributed=True` (r14 — round-13 verdict Next #2, the two-level
     composition): the per-row centroid comes from an EQUI-JOIN against
@@ -610,15 +493,9 @@ def _encode_codes_residual(
     remove. Same doubles, same subtraction → bit-identical codes
     (attach_pq_lut centroid_col docstring); the join is cell-keyed, AQE
     broadcasts a KB centroid frame and shuffle-joins a corpus-scale one.
-
-    `codebook_rows` (r15): raw (s, code, csub) tuples when the caller
-    already holds them driver-side (a seeded build, a pyarrow store
-    read) — skips the collect job over the codebook frame."""
-    cb_np, m, n_codes, sub_dim = (
-        _codebook_from_rows(codebook_rows)
-        if codebook_rows is not None
-        else _collect_codebook(codebook)
-    )
+    Otherwise `cent_rows` (cell_id-ascending, when the caller already
+    holds them) skips the centroid collect job (r14)."""
+    cb_np, m, n_codes, sub_dim = _codebook_from_rows(cb_rows)
     if distributed:
         cent = centroids.select("cell_id", F.col("centroid").alias("__cent"))
         coded = attach_pq_lut(
@@ -626,16 +503,11 @@ def _encode_codes_residual(
             residual=True, centroid_col="__cent", with_codes=True,
         )
     else:
-        if cent_rows is not None:
-            # the caller already holds the cell_id-ascending centroid rows
-            # (build's exact pick) — same matrix `_collect_centroids`
-            # would rebuild, minus its driver job (r14)
-            import numpy as np
-
-            cent_np = np.asarray([v for _c, v in cent_rows], dtype=np.float64)
-            cent_pos = {c: i for i, (c, _v) in enumerate(cent_rows)}
-        else:
-            cent_np, cent_pos = _collect_centroids(centroids)
+        cent_np, cent_pos = (
+            _cent_np_pos_from_rows(cent_rows)
+            if cent_rows is not None
+            else _collect_centroids(centroids)
+        )
         coded = attach_pq_lut(
             stored, cb_np, m, n_codes, sub_dim, vec_col,
             residual=True, cent_np=cent_np, cent_pos=cent_pos, with_codes=True,
@@ -749,7 +621,7 @@ def build_ann_index(
     pq_seeded = bool(residual and sub_codebook is None)
     n_codes = None
     cent_rows = None  # driver-held centroid rows when the pick is exact (r14)
-    cb_rows = None  # driver-held codebook rows when the build seeded them (r15)
+    cb_rows = None  # driver-held codebook rows: every PQ build holds them (r15)
     if pq_seeded:
         # SEEDED residual codebook, bit-identical to ivfpq_topk's: ONE
         # md5 pick serves the centroids AND the codebook seeds (the pick
@@ -758,7 +630,7 @@ def build_ann_index(
         # codebook from the new pick (retrain == fresh seeded build).
         n_codes = pq_n_codes or n_cells or auto_n_cells(normed, n_rows=n_rows)
         if centroids is None:
-            centroids, sub_codebook, cent_rows, cb_rows = _seeded_residual_model(
+            _c, _cb, cent_rows, cb_rows = _seeded_residual_model(
                 spark, normed, n_cells, n_codes, m, sub_dim,
                 id_col, vec_col, n_rows=n_rows,
             )
@@ -766,22 +638,13 @@ def build_ann_index(
             # caller-provided model: seeds' homes computed against IT. The
             # seeds come straight off `exact_pick_rows` (r14 — the former
             # shape created the pick frame and re-collected it)
-            import numpy as np
-
             big_rows = exact_pick_rows(
                 normed, max(n_cells or 0, n_codes), id_col, vec_col, n_rows=n_rows
             )
-            centroids = centroids.transform(_materialize)
-            cent_rows = sorted(
-                (int(r["cell_id"]), list(r["centroid"]))
-                for r in centroids.select("cell_id", "centroid").collect()
-            )
-            cent_np = np.asarray([v for _c, v in cent_rows], dtype=np.float64)
+            cent_rows = _centroid_rows(centroids)
             cb_rows = seeded_residual_codebook_rows(
-                [(c, v) for c, v in big_rows if c < n_codes], cent_np, m, sub_dim
-            )
-            sub_codebook = local_rows_df(
-                spark, cb_rows, "s int, code int, csub array<double>"
+                [(c, v) for c, v in big_rows if c < n_codes],
+                _cent_np_pos_from_rows(cent_rows)[0], m, sub_dim,
             )
     elif centroids is None:
         if two_level:
@@ -793,80 +656,49 @@ def build_ann_index(
         else:
             # the exact pick collects its survivors anyway — keep the
             # rows (r14): they feed the assign kernel, the meta shape,
-            # and the ONE-slice literal frame below (single-file
-            # /centroids ⇒ single-task reads in every later verb)
+            # and the single-file /centroids write below
             cent_rows = exact_pick_rows(
                 normed, n_cells, id_col, vec_col, n_rows=n_rows
             )
-            centroids = local_rows_df(
-                spark, cent_rows, "cell_id int, centroid array<double>"
-            )
-    else:
-        # caller-provided model (e.g. Lloyd-refined): cut its corpus lineage
-        centroids = centroids.transform(_materialize)
-    # NOTE (r12, measured): do NOT coalesce(1) these literal-frame model
-    # writes. A parallelized (createDataFrame) frame coalesced to one
-    # partition makes the single write task stream all 32 Python-
-    # serialized parent partitions SEQUENTIALLY (~5 s each write); the
-    # plain 32-task write of the same KB frame is ~0.5 s. SCALING.md
-    # "build-wall attribution" records the A/B.
-    # r15: when the exact pick's rows are DRIVER-HELD and the store is
-    # local, the /centroids write is a driver-side pyarrow touch — zero
-    # Spark jobs for data that never was distributed (guide §5). The
-    # distributed write remains for corpus-lineage picks (two-level /
-    # threshold) and non-local stores.
-    cent_lp = _local_fs_path(path + "/centroids")
-    if cent_rows is not None and cent_lp is not None:
-        _pa_write_rows(cent_lp, cent_rows, _centroids_pa_schema())
-        # rebind to the written file: identical rows, and keeps the
-        # downstream schema anchor a real parquet relation either way
-        centroids = spark.read.parquet(path + "/centroids")
+    if sub_codebook is not None and cb_rows is None:
+        # caller-provided codebook: ONE collect (n_codes·m rows, KB at any
+        # N by contract) serves the /codebook write AND the encode leg
+        cb_rows = sorted(
+            (int(r["s"]), int(r["code"]), list(r["csub"]))
+            for r in sub_codebook.collect()
+        )
+    # Driver-held model rows go through the control-plane seam (r15: zero
+    # Spark jobs on a local store). A corpus-lineage pick (two-level
+    # threshold) or a caller-provided frame (e.g. Lloyd-refined) is
+    # written as a frame; the parquet write/read-back is its lineage
+    # boundary.
+    if cent_rows is not None:
+        write_rows(spark, path, "centroids", cent_rows)
     else:
         centroids.write.mode("overwrite").parquet(path + "/centroids")
-        if two_level:
-            centroids = spark.read.parquet(path + "/centroids")
-    # the stored model's REALIZED shape (r14): known free when the exact
-    # pick's rows are driver-held; from the written files' parquet
-    # footers on a local store (r15 — row counts live in the metadata,
-    # no scan job); one distributed stats job only on non-local stores
-    if cent_rows is not None:
-        n_cells_stored, dim_stored = len(cent_rows), dim
-    else:
-        shape = _centroids_shape_from_files(path)
-        if shape is not None:
-            n_cells_stored, dim_stored = shape
-        else:
-            n_cells_stored, dim_stored = corpus_stats(centroids, "centroid")
+    centroids = spark.read.parquet(path + "/centroids")
     # the build-time knobs are INDEX properties: persist them so append/
-    # search/retrain/streaming read the same config without re-threading
-    # (driver-side pyarrow write on a local store — zero jobs, r15)
-    _write_meta(
-        spark,
-        path,
-        (
-            int(n_home), bool(residual), pq_seeded,
-            int(n_codes) if pq_seeded else None,
-            int(m) if pq_seeded else None,
-            int(sub_dim) if pq_seeded else None,
-            bool(two_level),
-            int(super_probe),
-            int(n_cells_stored),
-            int(dim_stored),
-        ),
-    )
-    # with_rank in both branches of ivf_assign is free (the kernel already
-    # holds the argsort order); n_home rows per vector, rank 1 = home
-    if two_level:
-        stored = ivf_assign_two_level(
-            normed, centroids, super_probe=super_probe, n_probe=n_home,
-            id_col=id_col, vec_col=vec_col, with_rank=True,
-            n_cells=n_cells_stored, dim=dim_stored,
-        ).select(id_col, vec_col, "cell_id", "probe_rank")
-    else:
-        stored = ivf_assign(
-            normed, centroids, n_home, id_col, vec_col,
-            with_rank=True, n_cells=n_cells, dim=dim, centroid_rows=cent_rows,
-        ).select(id_col, vec_col, "cell_id", "probe_rank")
+    # search/retrain/streaming read the same config without re-threading,
+    # with the stored model's REALIZED shape (r14; a footer count when the
+    # rows are not driver-held)
+    meta = {
+        "n_home": int(n_home),
+        "residual": bool(residual),
+        "pq_seeded": pq_seeded,
+        "pq_n_codes": int(n_codes) if pq_seeded else None,
+        "m": int(m) if pq_seeded else None,
+        "sub_dim": int(sub_dim) if pq_seeded else None,
+        "two_level": bool(two_level),
+        "super_probe": int(super_probe),
+        "n_cells": len(cent_rows) if cent_rows is not None
+        else row_count(spark, path, "centroids"),
+        "dim": int(dim),
+    }
+    _write_meta(spark, path, meta)
+    # n_home rows per vector, rank 1 = home
+    stored = _assign_stored(
+        normed, centroids, n_home, meta, cent_rows, id_col, vec_col
+    ).select(id_col, vec_col, "cell_id", "probe_rank")
     # train-time rows are stamped batch_id = -1 and the store is partitioned
     # by batch_id, so the streaming ingester's `batch_id < current` prior-
     # store filter sees the pre-built corpus (it would silently project NULL
@@ -878,59 +710,27 @@ def build_ann_index(
         .partitionBy("batch_id")
         .parquet(path + "/vectors")
     )
-    if sub_codebook is not None:
+    if cb_rows is not None:
         # persist the PQ model AND the compressed corpus: m ints/vector is
         # the frame the compressed-domain search joins at 100 TB. Codes
         # mirror /vectors' batch_id partitioning (r11) so the streaming
         # ingester's compressed path overwrites per-partition exactly-once.
         # The codebook is n_codes·m rows (KB at any N, by contract), so a
-        # single-file write is scale-safe and makes every later
-        # `_collect_codebook` a one-task read (r14). Seeded builds hold
-        # the rows driver-side → pyarrow write on a local store (r15);
-        # caller-provided frames keep the repartition(1) write — NOT
-        # coalesce, which would serialize a parallelized literal's
-        # parents through one task, the r12 footgun.
-        cb_lp = _local_fs_path(path + "/codebook")
-        if cb_rows is None and cb_lp is not None:
-            # caller-provided codebook on a local store: ONE collect (the
-            # frame is n_codes·m rows, KB at any N by contract) serves
-            # the /codebook write AND the encode leg below — the former
-            # shape paid a repartition-write job plus the encode's own
-            # collect job for the same rows (r15)
-            cb_rows = sorted(
-                (int(r["s"]), int(r["code"]), list(r["csub"]))
-                for r in sub_codebook.collect()
-            )
-        if cb_rows is not None and cb_lp is not None:
-            _pa_write_rows(cb_lp, cb_rows, _codebook_pa_schema())
-        else:
-            sub_codebook.repartition(1).write.mode("overwrite").parquet(
-                path + "/codebook"
-            )
+        # single-file write is scale-safe and makes every later read a
+        # one-task read (r14).
+        write_rows(spark, path, "codebook", cb_rows)
         # the codes encode reads the JUST-WRITTEN corpus back (r15 —
         # round-14 verdict Next #3 "reuse the assign output"): the
-        # parquet write IS the materialization boundary, so the former
-        # extra localCheckpoint job (and its block I/O) disappears;
-        # parquet round-trips doubles exactly → bit-identical codes
+        # parquet write IS the materialization boundary, so no extra
+        # localCheckpoint job; parquet round-trips doubles exactly →
+        # bit-identical codes
         stored_rb = (
             spark.read.parquet(path + "/vectors")
             .where(F.col("batch_id") == -1)
             .select(id_col, vec_col, "cell_id", "probe_rank")
         )
-        if cb_rows is not None:
-            _cb_np, cb_m, _cb_nc, cb_sd = _codebook_from_rows(cb_rows)
-        else:
-            cb_m = cb_sd = None
-        codes = (
-            _encode_codes_residual(
-                stored_rb, sub_codebook, centroids, id_col, vec_col,
-                distributed=two_level, cent_rows=cent_rows,
-                codebook_rows=cb_rows,
-            )
-            if residual
-            else _encode_codes(
-                stored_rb, sub_codebook, id_col, vec_col, m=cb_m, sub_dim=cb_sd
-            )
+        codes = _encode_codes(
+            stored_rb, path, cb_rows, meta, centroids, cent_rows, id_col, vec_col
         )
         (
             codes.withColumn("batch_id", F.lit(-1).cast("bigint"))
@@ -961,12 +761,10 @@ def append_to_index(
     Returns the updated corpus frame."""
     cents = spark.read.parquet(path + "/centroids")
     meta = _meta_dict(spark, path)  # ONE meta read per verb (r14, driver-side r15)
-    n_home, residual = _meta_n_home_residual(meta)
-    two_level, super_probe = _meta_two_level(meta)
-    n_cells_m, dim_m = _meta_shape(meta)  # skips the per-verb stats job (r14)
-    # flat local store: the centroid rows come off a driver-side pyarrow
-    # read (r15) so the assign kernel skips its own collect job; `cents`
-    # stays the schema/fallback anchor (lazy — no job)
+    n_home = _meta_n_home_residual(meta)[0]
+    # flat store: the centroid rows come off the control-plane read (r15)
+    # so the assign kernel skips its own collect job; `cents` stays the
+    # schema/fallback anchor
     cent_rows_l = _centroid_rows_from_store(spark, path, meta)
     # repartition the late batch BEFORE the normalize+assign projection —
     # the build's own discipline (r15): a single-file batch arrives as
@@ -978,27 +776,18 @@ def append_to_index(
     normed = normalize_vectors(new_vectors.repartition(par), id_col, vec_col)
     # a two-level-built store (meta two_level, r12) routes the late batch
     # coarse-to-fine as well: appends never collect the stored centroids
-    assigned = (
-        ivf_assign_two_level(
-            normed, cents, super_probe=super_probe, n_probe=n_home,
-            id_col=id_col, vec_col=vec_col, with_rank=True,
-            n_cells=n_cells_m, dim=dim_m,
-        )
-        if two_level
-        else ivf_assign(
-            normed, cents, n_home, id_col, vec_col, with_rank=True,
-            n_cells=n_cells_m, dim=dim_m, centroid_rows=cent_rows_l,
-        )
+    assigned = _assign_stored(
+        normed, cents, n_home, meta, cent_rows_l, id_col, vec_col
     ).select(id_col, vec_col, "cell_id", "probe_rank")
-    next_batch = _next_batch_id(spark, path)
-    codebook = _codebook_frame(spark, path)
+    next_batch = max(batch_ids(spark, path), default=-1) + 1
+    cb_rows = _codebook_rows(spark, path)
     (
         assigned.withColumn("batch_id", F.lit(next_batch).cast("bigint"))
         .write.mode("append")
         .partitionBy("batch_id")
         .parquet(path + "/vectors")
     )
-    if codebook is not None:
+    if cb_rows is not None:
         # encode the JUST-WRITTEN batch partition (r15): the append write
         # is the materialization boundary — the former localCheckpoint
         # job before the two consumers disappears, and partition pruning
@@ -1008,33 +797,13 @@ def append_to_index(
             .where(F.col("batch_id") == next_batch)
             .select(id_col, vec_col, "cell_id", "probe_rank")
         )
-        cb_rows_l = _codebook_rows_from_store(path)  # driver-side (r15)
-        if cb_rows_l is not None:
-            _cb_np, cb_m, _cb_nc, cb_sd = _codebook_from_rows(cb_rows_l)
-        else:
-            cb_m = cb_sd = None
-        codes = (
-            _encode_codes_residual(
-                batch_rb, codebook, cents, id_col, vec_col,
-                distributed=two_level, cent_rows=cent_rows_l,
-                codebook_rows=cb_rows_l,
-            )
-            if residual
-            else _encode_codes(
-                batch_rb, codebook, id_col, vec_col, m=cb_m, sub_dim=cb_sd
-            )
+        (
+            _encode_codes(batch_rb, path, cb_rows, meta, cents, cent_rows_l, id_col, vec_col)
+            .withColumn("batch_id", F.lit(next_batch).cast("bigint"))
+            .write.mode("append")
+            .partitionBy("batch_id")
+            .parquet(path + "/codes")
         )
-        if "batch_id" in spark.read.parquet(path + "/codes").columns:
-            (
-                codes.withColumn("batch_id", F.lit(next_batch).cast("bigint"))
-                .write.mode("append")
-                .partitionBy("batch_id")
-                .parquet(path + "/codes")
-            )
-        else:
-            # pre-r11 store: keep its unpartitioned /codes layout (mixing
-            # partitioned subdirs into a flat dir corrupts the read)
-            codes.write.mode("append").parquet(path + "/codes")
     return spark.read.parquet(path + "/vectors")
 
 
@@ -1084,8 +853,8 @@ def search_index(
     n_home, residual = _meta_n_home_residual(meta)
     two_level, super_probe = _meta_two_level(meta)
     n_cells_m, dim_m = _meta_shape(meta)  # skips the per-verb stats job (r14)
-    # flat local store: centroid rows off a driver-side pyarrow read (r15)
-    # — the probe assign and the residual LUT leg skip their collect jobs
+    # flat store: centroid rows off the control-plane read (r15) — the
+    # probe assign and the residual LUT leg skip their collect jobs
     cent_rows_l = _centroid_rows_from_store(spark, path, meta)
     # home rows = exactly one row per stored vector: the query leg (and
     # the PQ rerank's raw-vector legs) must never see spilled copies —
@@ -1147,7 +916,10 @@ def search_index(
                 "cos_sim",
             )
         )
-    cb_np, m, n_codes, sub_dim = _collect_codebook_store(spark, path)
+    cb_rows = _codebook_rows(spark, path)
+    if cb_rows is None:
+        raise ValueError(f"use_pq=True requires a codebook-built index ({path}/codebook is missing)")
+    cb_np, m, n_codes, sub_dim = _codebook_from_rows(cb_rows)
     if residual:
         # one LUT per (query, probed cell), each from the query's residual
         # wrt that cell — matching the stored per-copy residual codes. On
@@ -1162,8 +934,8 @@ def search_index(
                 residual=True, centroid_col="__cent",
             ).drop("__cent").transform(_materialize)
         else:
-            # rows already driver-held (pyarrow, cell-sorted) — same
-            # matrix `_collect_centroids` would re-collect (r15)
+            # rows already driver-held (cell-sorted) — same matrix
+            # `_collect_centroids` would re-collect (r15)
             cent_np, cent_pos = (
                 _cent_np_pos_from_rows(cent_rows_l)
                 if cent_rows_l is not None
@@ -1233,9 +1005,9 @@ def index_health(
     nc_meta, _dm_meta = _meta_shape(meta)
     # the REALIZED trained-cell count is persisted in meta at build/
     # retrain (r14) and never changes on append/compact/delete — a
-    # meta-bearing store skips the centroid scan job (r15); stores
-    # predating the shape columns keep the count aggregate (same value,
-    # the oracle replays the scan either way)
+    # meta-bearing store skips the centroid scan job (r15); a store with
+    # no meta keeps the count aggregate (same value, the oracle replays
+    # the scan either way)
     n_trained = (
         spark.range(1).select(F.lit(int(nc_meta)).alias("n_cells_trained"))
         if nc_meta is not None
@@ -1244,7 +1016,7 @@ def index_health(
         )
     )
     occ = (
-        _with_probe_rank(spark.read.parquet(path + "/vectors"))
+        spark.read.parquet(path + "/vectors")
         .groupBy("cell_id")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -1284,11 +1056,11 @@ def compact_index(spark: SparkSession, path: str) -> DataFrame:
     rewritten. The cheap answer when `index_health` shows many small
     append partitions (file-count pressure) but acceptable skew: after a
     compact, `appended_frac` reads 0 while search results are identical.
-    The corpus is materialized before the in-place overwrite. A
-    batch_id-partitioned /codes store (r11 layout) merges the same way —
-    codes content unchanged, only the layout folds into batch_id = -1."""
+    The corpus is materialized before the in-place overwrite. /codes
+    merges the same way — codes content unchanged, only the layout folds
+    into batch_id = -1."""
     snap = (
-        _with_probe_rank(spark.read.parquet(path + "/vectors"))
+        spark.read.parquet(path + "/vectors")
         .select("vec_id", "embedding", "cell_id", "probe_rank")
         .transform(_materialize)
     )
@@ -1298,12 +1070,10 @@ def compact_index(spark: SparkSession, path: str) -> DataFrame:
         .partitionBy("batch_id")
         .parquet(path + "/vectors")
     )
-    try:
-        codes = spark.read.parquet(path + "/codes")
-    except AnalysisException:
-        codes = None
-    if codes is not None and "batch_id" in codes.columns:
-        snap_codes = codes.drop("batch_id").transform(_materialize)
+    if read_rows(spark, path, "codebook") is not None:  # /codes exists
+        snap_codes = (
+            spark.read.parquet(path + "/codes").drop("batch_id").transform(_materialize)
+        )
         (
             snap_codes.withColumn("batch_id", F.lit(-1).cast("bigint"))
             .write.mode("overwrite")
@@ -1327,23 +1097,14 @@ def delete_from_index(
     decision, not an implicit side effect. Both frames are materialized
     before their in-place overwrites."""
     key = ids.select(F.col(id_col)).distinct().transform(_materialize)
-    kept = (
-        _with_probe_rank(spark.read.parquet(path + "/vectors"))
-        .join(key, id_col, "left_anti")
-        .select(id_col, "embedding", "cell_id", "probe_rank", "batch_id")
-        .transform(_materialize)
-    )
-    kept.write.mode("overwrite").partitionBy("batch_id").parquet(path + "/vectors")
-    try:
-        codes = spark.read.parquet(path + "/codes")
-    except AnalysisException:
-        codes = None
-    if codes is not None:
-        kept_codes = codes.join(key, id_col, "left_anti").transform(_materialize)
-        writer = kept_codes.write.mode("overwrite")
-        if "batch_id" in kept_codes.columns:  # r11 layout mirrors /vectors
-            writer = writer.partitionBy("batch_id")
-        writer.parquet(path + "/codes")
+    subs = ["vectors"] + (["codes"] if read_rows(spark, path, "codebook") is not None else [])
+    for sub in subs:
+        kept = (
+            spark.read.parquet(f"{path}/{sub}")
+            .join(key, id_col, "left_anti")
+            .transform(_materialize)
+        )
+        kept.write.mode("overwrite").partitionBy("batch_id").parquet(f"{path}/{sub}")
     return spark.read.parquet(path + "/vectors")
 
 
@@ -1380,11 +1141,11 @@ def retrain_index(
     rewritten corpus frame."""
     meta = _meta_dict(spark, path)  # ONE meta read per verb (r14)
     n_home, residual = _meta_n_home_residual(meta)
-    two_level, super_probe = _meta_two_level(meta)
+    two_level, _sp = _meta_two_level(meta)
     # re-pick/re-assign over one row per VECTOR (home rows) — the spilled
     # copies are derived storage, recomputed below from the new model
     snap = (
-        _with_probe_rank(spark.read.parquet(path + "/vectors"))
+        spark.read.parquet(path + "/vectors")
         .where(F.col("probe_rank") == 1)
         .select(id_col, vec_col)
         .transform(_materialize)
@@ -1393,93 +1154,53 @@ def retrain_index(
     if n_cells is None:
         n_cells = auto_n_cells(snap, n_rows=n_rows)
     pq_seeded, pq_n_codes, meta_m, meta_sub_dim = _meta_seeded_pq(meta)
-    cent_rows_new = None
-    cb_rows_new = None
+    cent_rows = None
     if pq_seeded and residual:
         # the build SELF-CONSTRUCTED its seeded residual codebook (params
         # in meta): rebuild it from the NEW pick over the current corpus,
         # so a retrained seeded store == a fresh seeded build — the
         # retrain==fresh-build contract extends to the residual config
         # (a caller-provided codebook is still kept untouched)
-        cents, codebook, cent_rows_new, cb_rows_new = _seeded_residual_model(
+        _c, _cb, cent_rows, cb_rows = _seeded_residual_model(
             spark, snap, n_cells, pq_n_codes, meta_m, meta_sub_dim,
             id_col, vec_col, n_rows=n_rows,
         )
-        cb_lp = _local_fs_path(path + "/codebook")
-        if cb_lp is not None:  # driver-held rows → zero-job write (r15)
-            _pa_write_rows(cb_lp, cb_rows_new, _codebook_pa_schema())
-        else:
-            codebook.write.mode("overwrite").parquet(path + "/codebook")
-    elif two_level:
-        # a two-level store retrains two-level: fully-distributed re-pick.
-        # A trained plain codebook (the r13 composed configuration) is a
-        # model artifact fixed at build time — kept untouched, codes
-        # re-encoded against it below
-        cents = threshold_centroids(snap, n_cells, id_col, vec_col, n_rows=n_rows)
-        try:
-            codebook = spark.read.parquet(path + "/codebook").transform(_materialize)
-        except AnalysisException:
-            codebook = None
+        write_rows(spark, path, "codebook", cb_rows)
     else:
-        cent_rows_new = exact_pick_rows(snap, n_cells, id_col, vec_col, n_rows=n_rows)
-        cents = local_rows_df(
-            spark, cent_rows_new, "cell_id int, centroid array<double>"
-        )
-        codebook = _codebook_frame(spark, path)
-        if codebook is not None:
-            codebook = codebook.transform(_materialize)
-    cent_lp = _local_fs_path(path + "/centroids")
-    if cent_rows_new is not None and cent_lp is not None:
-        _pa_write_rows(cent_lp, cent_rows_new, _centroids_pa_schema())
-        cents = spark.read.parquet(path + "/centroids")
+        # any other codebook is a model artifact fixed at build time —
+        # kept untouched, codes re-encoded against it below
+        cb_rows = _codebook_rows(spark, path)
+        if two_level:
+            # a two-level store retrains two-level: fully-distributed re-pick
+            cents = threshold_centroids(snap, n_cells, id_col, vec_col, n_rows=n_rows)
+        else:
+            cent_rows = exact_pick_rows(snap, n_cells, id_col, vec_col, n_rows=n_rows)
+    if cent_rows is not None:
+        write_rows(spark, path, "centroids", cent_rows)
     else:
         cents.write.mode("overwrite").parquet(path + "/centroids")
-        if two_level:
-            cents = spark.read.parquet(path + "/centroids")
+    cents = spark.read.parquet(path + "/centroids")
     # the model SHAPE changed with the re-pick: refresh meta's realized
     # (n_cells, dim) so later verbs keep skipping the stats job against
     # the CURRENT model (r14 — a stale count would change a two-level
     # store's super pick)
-    if cent_rows_new is not None:
-        n_cells_stored, dim_stored = len(cent_rows_new), dim
-    else:
-        shape = _centroids_shape_from_files(path)
-        if shape is not None:
-            n_cells_stored, dim_stored = shape
-        else:
-            n_cells_stored, dim_stored = corpus_stats(cents, "centroid")
-    _write_meta(
-        spark,
-        path,
-        (
-            int(n_home), bool(residual), bool(pq_seeded),
-            int(pq_n_codes) if pq_seeded else None,
-            int(meta_m) if pq_seeded else None,
-            int(meta_sub_dim) if pq_seeded else None,
-            bool(two_level),
-            int(super_probe),
-            int(n_cells_stored),
-            int(dim_stored),
-        ),
+    meta = dict(
+        meta,
+        n_cells=len(cent_rows) if cent_rows is not None
+        else row_count(spark, path, "centroids"),
+        dim=int(dim),
     )
-    if two_level:
-        stored = ivf_assign_two_level(
-            snap, cents, super_probe=super_probe, n_probe=n_home,
-            id_col=id_col, vec_col=vec_col, with_rank=True,
-            n_cells=n_cells_stored, dim=dim_stored,
-        ).select(id_col, vec_col, "cell_id", "probe_rank")
-    else:
-        stored = ivf_assign(
-            snap, cents, n_home, id_col, vec_col,
-            with_rank=True, n_cells=n_cells, dim=dim, centroid_rows=cent_rows_new,
-        ).select(id_col, vec_col, "cell_id", "probe_rank")
+    _write_meta(spark, path, meta)
+    stored = _assign_stored(
+        snap, cents, n_home, meta, cent_rows, id_col, vec_col
+    ).select(id_col, vec_col, "cell_id", "probe_rank")
     (
         stored.withColumn("batch_id", F.lit(-1).cast("bigint"))
         .write.mode("overwrite")
         .partitionBy("batch_id")
         .parquet(path + "/vectors")
     )
-    if codebook is not None:
+    if cb_rows is not None:
         # encode the just-rewritten corpus (r15): the overwrite IS the
         # materialization boundary — no extra localCheckpoint job
         stored_rb = (
@@ -1487,25 +1208,9 @@ def retrain_index(
             .where(F.col("batch_id") == -1)
             .select(id_col, vec_col, "cell_id", "probe_rank")
         )
-        if cb_rows_new is None:
-            cb_rows_new = _codebook_rows_from_store(path)  # driver-side (r15)
-        if cb_rows_new is not None:
-            _cb_np, cb_m, _cb_nc, cb_sd = _codebook_from_rows(cb_rows_new)
-        else:
-            cb_m = cb_sd = None
-        codes = (
-            _encode_codes_residual(
-                stored_rb, codebook, cents, id_col, vec_col,
-                distributed=two_level, cent_rows=cent_rows_new,
-                codebook_rows=cb_rows_new,
-            )
-            if residual
-            else _encode_codes(
-                stored_rb, codebook, id_col, vec_col, m=cb_m, sub_dim=cb_sd
-            )
-        )
         (
-            codes.withColumn("batch_id", F.lit(-1).cast("bigint"))
+            _encode_codes(stored_rb, path, cb_rows, meta, cents, cent_rows, id_col, vec_col)
+            .withColumn("batch_id", F.lit(-1).cast("bigint"))
             .write.mode("overwrite")
             .partitionBy("batch_id")
             .parquet(path + "/codes")

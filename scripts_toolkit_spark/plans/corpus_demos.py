@@ -1395,27 +1395,14 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # away. Σ_grams λ_b ≡ Σ_b c_b·λ_b exactly (decimal sums are exact and
     # order-free; both paths cast the same scale-6 decimal to double), so
     # weight and n_feats (= Σ c = row count) are bit-identical.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_DSIR_TWO_PHASE"):  # A/B hook (r15)
-        doc_b = feats.groupBy("doc_id", "lang", "b").agg(F.count(F.lit(1)).alias("c"))
-        wts = (
-            doc_b.join(lam, "b")
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.sum("c").cast("bigint").alias("n_feats"),
-                F.round(F.sum(F.col("c") * F.col("lam")).cast("double"), 6).alias("weight"),
-            )
+    wts = (
+        feats.join(lam, "b")
+        .groupBy("doc_id", "lang")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_feats"),
+            F.round(F.sum("lam").cast("double"), 6).alias("weight"),
         )
-    else:
-        wts = (
-            feats.join(lam, "b")
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_feats"),
-                F.round(F.sum("lam").cast("double"), 6).alias("weight"),
-            )
-        )
+    )
     return global_topk(
         wts, [F.desc("weight"), F.asc("doc_id")], 200
     ).select("doc_id", "lang", "n_feats", "weight", F.col("rank").cast("int").alias("rank"))
@@ -2059,21 +2046,11 @@ def corpus_prep_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins onto the exploded feats and one groupBy(doc_id) sums it;
     # Σ_grams λ_b ≡ Σ_b c_b·λ_b exactly (order-free decimal sums, same
     # scale-6 decimal→double), so weight is bit-identical.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_DSIR_TWO_PHASE"):  # A/B hook (r15)
-        doc_b = feats.groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("c"))
-        wts = (
-            doc_b.join(lam, "b")
-            .groupBy("doc_id")
-            .agg(F.round(F.sum(F.col("c") * F.col("lam")).cast("double"), 6).alias("weight"))
-        )
-    else:
-        wts = (
-            feats.join(lam, "b")
-            .groupBy("doc_id")
-            .agg(F.round(F.sum("lam").cast("double"), 6).alias("weight"))
-        )
+    wts = (
+        feats.join(lam, "b")
+        .groupBy("doc_id")
+        .agg(F.round(F.sum("lam").cast("double"), 6).alias("weight"))
+    )
 
     # importance acceptance: u < logistic(weight / s)
     u = (

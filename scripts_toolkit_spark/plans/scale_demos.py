@@ -406,9 +406,11 @@ def bloom_semijoin_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     adaptively; here it is explicit, md5-deterministic, and the oracle
     replays the bitmap bit-for-bit — false positives included.
 
-    Scale shape: one |keys|-row agg (KB bitmap), one map-only probe pass,
-    then the real equi-join over the ~20% survivors (AQE picks the
-    strategy; no forced broadcast — orders is SF-linear)."""
+    Scale shape: one |keys|-row agg (KB bitmap), one round-robin
+    exchange of the three probe columns (spreads the 3×md5 probe over
+    every core), one probe pass after it, then the real equi-join over
+    the ~20% survivors (AQE picks the strategy; no forced broadcast —
+    orders is SF-linear)."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     build = orders.where(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
@@ -457,12 +459,11 @@ def bloom_semijoin_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the hash work cluster-wide BEFORE the bitmap attach. On a real
     # cluster the scan is already many-split, so the repartition is
     # parallelism-neutral there and the cost stays one narrow exchange.
-    import os as _os
-
-    probe_side = li.select("l_orderkey", "l_extendedprice", "l_discount")
-    if not _os.environ.get("SPARK_GRAFT_BLOOM_NO_REPART"):  # A/B hook (r15)
-        probe_side = probe_side.repartition(spark.sparkContext.defaultParallelism)
-    probe = probe_side.crossJoin(bloom)
+    probe = (
+        li.select("l_orderkey", "l_extendedprice", "l_discount")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .crossJoin(bloom)
+    )
     ok = None
     for j in range(_BLOOM_K):
         idx1 = F.expr(

@@ -98,11 +98,6 @@ def coalesced_tiny_shuffles(spark: SparkSession, size: str = "1m"):
     back to the caller is already materialized, and any lazy tail plans
     execute under the caller's config. SQL confs are read per query
     execution — runtime-settable, no session rebuild."""
-    if os.environ.get("SPARK_GRAFT_SCOPED_FLOOR_OFF"):
-        # measurement hook: lets an interleaved A/B time the pre-scope
-        # behavior on the same host window without a code toggle
-        yield
-        return
     old = spark.conf.get(_AQE_FLOOR_KEY, None)
     spark.conf.set(_AQE_FLOOR_KEY, size)
     try:

@@ -42,33 +42,28 @@ shortlists through the same `_pq_rank` pipeline as
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from scripts_toolkit_spark.ext.ann_index import (
+    _assign_stored,
     _cent_np_pos_from_rows,
     _centroid_rows_from_store,
-    _codebook_frame,
     _codebook_from_rows,
-    _codebook_rows_from_store,
+    _codebook_rows,
     _collect_centroids,
-    _collect_codebook_store,
     _encode_codes,
-    _encode_codes_residual,
     _meta_dict,
     _meta_n_home_residual,
-    _meta_shape,
     _meta_two_level,
+    batch_ids,
 )
 from scripts_toolkit_spark.ext.similarity import (
     _dot,
     _dot_rows_kernel,
     _pq_rank,
     attach_pq_lut,
-    ivf_assign,
-    ivf_assign_two_level,
     normalize_vectors,
 )
 from scripts_toolkit_spark.materialize import materialize as _materialize
@@ -89,11 +84,6 @@ def _codes_schema(cell_type: str = "int") -> str:
         f"vec_id bigint, ncodes array<int>, cell_id {cell_type}, "
         "probe_rank int, batch_id bigint"
     )
-
-
-# legacy module-level constants (flat-store layout), kept for importers
-STORE_SCHEMA = _store_schema()
-CODES_SCHEMA = _codes_schema()
 
 
 def make_ann_ingest_processor(
@@ -138,18 +128,17 @@ def make_ann_ingest_processor(
         cents = spark.read.parquet(index_path + "/centroids")
         meta = _meta_dict(spark, index_path)  # ONE meta read per batch (r14, driver-side r15)
         n_home, residual = _meta_n_home_residual(meta)
-        two_level, super_probe = _meta_two_level(meta)
-        n_cells_m, dim_m = _meta_shape(meta)  # skips the per-batch stats job (r14)
-        # flat local store: centroid rows off one driver-side pyarrow
-        # read, cached across batches (r15) — each batch's assign kernel
-        # skips its own collect job over the stored model
+        two_level, _sp = _meta_two_level(meta)
+        # the stored model (flat centroid rows, codebook rows) is read
+        # once per processor through the control-plane seam and cached
+        # (r15) — each batch's assign and encode skip their collect jobs
         if "cent_rows" not in model_cache:
             model_cache["cent_rows"] = _centroid_rows_from_store(
                 spark, index_path, meta
             )
-        cent_rows_l = model_cache["cent_rows"]
-        codebook = _codebook_frame(spark, index_path)
-        if use_pq and codebook is None:
+            model_cache["cb_rows"] = _codebook_rows(spark, index_path)
+        cent_rows_l, cb_rows = model_cache["cent_rows"], model_cache["cb_rows"]
+        if use_pq and cb_rows is None:
             raise ValueError(
                 "use_pq=True requires a codebook-built index "
                 f"({index_path}/codebook is missing)"
@@ -161,18 +150,8 @@ def make_ann_ingest_processor(
         # cell ids are the threshold-pick seeds' own (bigint) ids, so the
         # store-read schema widens accordingly.
         normed = normalize_vectors(batch, id_col, vec_col)
-        assigned = (
-            ivf_assign_two_level(
-                normed, cents, super_probe=super_probe,
-                n_probe=max(n_probe, n_home), id_col=id_col, vec_col=vec_col,
-                with_rank=True, n_cells=n_cells_m, dim=dim_m,
-            )
-            if two_level
-            else ivf_assign(
-                normed, cents, max(n_probe, n_home), id_col, vec_col,
-                with_rank=True, n_cells=n_cells_m, dim=dim_m,
-                centroid_rows=cent_rows_l,
-            )
+        assigned = _assign_stored(
+            normed, cents, max(n_probe, n_home), meta, cent_rows_l, id_col, vec_col
         ).transform(_materialize)
         cell_type = "bigint" if two_level else "int"
         store_schema = _store_schema(cell_type)
@@ -180,17 +159,18 @@ def make_ann_ingest_processor(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"),
             "cell_id", "probe_rank",
         )
-        try:
-            store = spark.read.schema(store_schema).parquet(index_path + "/vectors")
-        except AnalysisException:  # first batch: store not created yet
-            old = None
-        else:
-            old = store.where(F.col("batch_id") < F.lit(batch_id))
+        old = (
+            spark.read.schema(store_schema)
+            .parquet(index_path + "/vectors")
+            .where(F.col("batch_id") < F.lit(batch_id))
+            if batch_ids(spark, index_path)
+            else None  # first batch: store not created yet
+        )
         if old is not None and use_pq:
             # compressed-domain cross-batch match (same pipeline as
             # search_index(use_pq=True), prior-store codes as the corpus)
             if "cb" not in model_cache:
-                model_cache["cb"] = _collect_codebook_store(spark, index_path)
+                model_cache["cb"] = _codebook_from_rows(cb_rows)
                 # two-level stores never collect the centroid set (r14:
                 # the residual LUT join below resolves centroids per cell)
                 if not two_level:
@@ -314,31 +294,16 @@ def make_ann_ingest_processor(
             .partitionBy("batch_id")
             .parquet(index_path + "/vectors")
         )
-        if codebook is not None:
+        if cb_rows is not None:
             # keep /codes row-parity with /vectors for the NEXT batches'
-            # compressed match — same exactly-once partition overwrite.
-            # Codebook rows/shape come off the cached driver-side read
-            # (r15) so the per-batch encode skips its collect/stats job.
-            if "cb_rows" not in model_cache:
-                model_cache["cb_rows"] = _codebook_rows_from_store(index_path)
-            cb_rows_l = model_cache["cb_rows"]
-            if cb_rows_l is not None:
-                _n, cb_m, _nc, cb_sd = _codebook_from_rows(cb_rows_l)
-            else:
-                cb_m = cb_sd = None
-            batch_codes = (
-                _encode_codes_residual(
-                    new_rows, codebook, cents, "vec_id", "embedding",
-                    distributed=two_level, cent_rows=cent_rows_l,
-                    codebook_rows=cb_rows_l,
-                )
-                if residual
-                else _encode_codes(
-                    new_rows, codebook, "vec_id", "embedding", m=cb_m, sub_dim=cb_sd
-                )
-            )
+            # compressed match — same exactly-once partition overwrite,
+            # encoded from the cached codebook rows (r15)
             (
-                batch_codes.withColumn("batch_id", F.lit(batch_id))
+                _encode_codes(
+                    new_rows, index_path, cb_rows, meta, cents, cent_rows_l,
+                    "vec_id", "embedding",
+                )
+                .withColumn("batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch_id")

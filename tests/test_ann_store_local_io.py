@@ -1,53 +1,67 @@
-"""r15 lifecycle-fusion pins: on a LOCAL store the ANN index's KB
-control-plane files (/meta, /centroids, /codebook) are written/read
-DRIVER-SIDE via pyarrow (zero Spark jobs — guide §5), with the Spark
-distributed IO kept as the non-local fallback. These tests pin that the
-two write paths produce interchangeable files (same Spark-read schema,
-same rows) and that the driver-side readers return exactly what Spark
-reads back — the bit-parity precondition for every stored==ad-hoc
-guarantee built on top.
+"""The ANN store's control-plane IO seam (`read_rows` / `write_rows` /
+`batch_ids` / `row_count` in ext/ann_index.py). On a LOCAL store the KB
+control files (/meta, /centroids, /codebook) are written/read
+DRIVER-SIDE via pyarrow (zero Spark jobs); on a remote store the same
+calls go through Spark IO. These tests run BOTH implementations on a
+local dir and pin that they produce interchangeable files (same
+Spark-read schema, same rows) and read back the same rows — the
+bit-parity precondition for every stored==ad-hoc guarantee built on
+top.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from scripts_toolkit_spark.ext import ann_index as ANN
-from scripts_toolkit_spark.ext.similarity import local_rows_df
 
 
-META_VALS = (2, True, True, 64, 4, 16, False, 4, 44, 64)
+CONTROL_ROWS = {
+    "meta": [(2, True, True, 64, 4, 16, False, 4, 44, 64)],
+    "centroids": [(0, [1.0, 2.5]), (1, [0.25, -3.0])],
+    "codebook": [(0, 0, [1.0]), (0, 1, [2.0]), (1, 0, [3.0]), (1, 1, [4.0])],
+}
+
+
+def _schema(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
 
 
 def test_meta_pyarrow_write_matches_spark_write(spark, tmp_path):
+    """Every control file (meta, centroids, codebook) through both seam
+    implementations on one local dir."""
     pa_store = str(tmp_path / "pa_store")
     sp_store = str(tmp_path / "sp_store")
-    ANN._write_meta(spark, pa_store, META_VALS)  # local path → pyarrow
-    # the non-local fallback body, forced onto a local dir for comparison
-    local_rows_df(spark, [META_VALS], ANN._META_SPARK_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(sp_store + "/meta")
-    pa_df = spark.read.parquet(pa_store + "/meta")
-    sp_df = spark.read.parquet(sp_store + "/meta")
-    assert [(f.name, f.dataType.simpleString()) for f in pa_df.schema.fields] == [
-        (f.name, f.dataType.simpleString()) for f in sp_df.schema.fields
-    ]
-    assert pa_df.collect() == sp_df.collect()
-    # the driver-side reader sees the same dict for both layouts
+    pa_io, sp_io = ANN._ArrowStoreIO(pa_store), ANN._SparkStoreIO(spark, sp_store)
+    for name, rows in CONTROL_ROWS.items():
+        pa_io.write_rows(name, rows)
+        # the remote implementation, run on a local dir for comparison
+        sp_io.write_rows(name, rows)
+        pa_df = spark.read.parquet(f"{pa_store}/{name}")
+        sp_df = spark.read.parquet(f"{sp_store}/{name}")
+        assert _schema(pa_df) == _schema(sp_df), name
+        assert sorted(map(tuple, pa_df.collect())) == sorted(rows), name
+        assert sorted(map(tuple, sp_df.collect())) == sorted(rows), name
+        # either implementation reads either file back as the same dicts
+        got = [
+            sorted(io.read_rows(name), key=str)
+            for store in (pa_store, sp_store)
+            for io in (ANN._ArrowStoreIO(store), ANN._SparkStoreIO(spark, store))
+        ]
+        assert all(g == got[0] for g in got), name
+        # the seam call on a local path is the pyarrow one
+        assert ANN.read_rows(spark, pa_store, name) == pa_io.read_rows(name)
     assert ANN._meta_dict(spark, pa_store) == ANN._meta_dict(spark, sp_store)
+    # absent file: None from both implementations
+    assert pa_io.read_rows("nope") is None and sp_io.read_rows("nope") is None
 
 
 def test_centroids_and_codebook_roundtrip(spark, tmp_path):
     store = str(tmp_path / "store")
-    cent_rows = [(0, [1.0, 2.5]), (1, [0.25, -3.0])]
-    cb_rows = [(0, 0, [1.0]), (0, 1, [2.0]), (1, 0, [3.0]), (1, 1, [4.0])]
-    ANN._pa_write_rows(
-        ANN._local_fs_path(store + "/centroids"), cent_rows, ANN._centroids_pa_schema()
-    )
-    ANN._pa_write_rows(
-        ANN._local_fs_path(store + "/codebook"), cb_rows, ANN._codebook_pa_schema()
-    )
+    cent_rows = CONTROL_ROWS["centroids"]
+    cb_rows = CONTROL_ROWS["codebook"]
+    ANN.write_rows(spark, store, "centroids", cent_rows)
+    ANN.write_rows(spark, store, "codebook", cb_rows)
     cents = spark.read.parquet(store + "/centroids")
     assert cents.schema.simpleString() == (
         "struct<cell_id:int,centroid:array<double>>"
@@ -55,11 +69,15 @@ def test_centroids_and_codebook_roundtrip(spark, tmp_path):
     assert sorted((r["cell_id"], r["centroid"]) for r in cents.collect()) == cent_rows
     cb = spark.read.parquet(store + "/codebook")
     assert cb.schema.simpleString() == "struct<s:int,code:int,csub:array<double>>"
-    assert ANN._codebook_rows_from_store(store) is not None
-    cb_np, m, n_codes, sub_dim = ANN._collect_codebook_store(spark, store)
+    assert ANN._codebook_rows(spark, store) == cb_rows
+    cb_np, m, n_codes, sub_dim = ANN._codebook_from_rows(ANN._codebook_rows(spark, store))
     assert (m, n_codes, sub_dim) == (2, 2, 1)
     # driver read == Spark collect, element for element
-    assert ANN._collect_codebook(cb)[0].tolist() == cb_np.tolist()
+    via_spark = [(r["s"], r["code"], list(r["csub"])) for r in cb.collect()]
+    assert ANN._codebook_from_rows(via_spark)[0].tolist() == cb_np.tolist()
+    assert ANN.row_count(spark, store, "centroids") == len(cent_rows)
+    assert ANN._SparkStoreIO(spark, store).row_count("codebook") == len(cb_rows)
+    assert ANN._codebook_rows(spark, str(tmp_path / "ivf_only")) is None
 
 
 def test_centroid_rows_from_store_matches_collect(spark, sf_dir, tmp_path):
@@ -76,8 +94,9 @@ def test_centroid_rows_from_store_matches_collect(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(store + "/centroids").collect()
     )
     assert rows == via_spark
-    # shape helper agrees with the realized model
-    assert ANN._centroids_shape_from_files(store) == (len(rows), len(rows[0][1]))
+    # the footer count and the recorded shape agree with the realized model
+    assert ANN.row_count(spark, store, "centroids") == len(rows)
+    assert ANN._meta_shape(meta) == (len(rows), len(rows[0][1]))
 
 
 def test_next_batch_id_from_layout(spark, sf_dir, tmp_path):
@@ -87,10 +106,17 @@ def test_next_batch_id_from_layout(spark, sf_dir, tmp_path):
     base = emb.where(F.col("vec_id") % 5 != 0).limit(200)
     late = emb.where(F.col("vec_id") % 5 == 0).limit(50)
     store = str(tmp_path / "store")
+    assert ANN.batch_ids(spark, store) == []  # nothing written yet
     ANN.build_ann_index(base, store, n_cells=8)
-    assert ANN._next_batch_id(spark, store) == 0  # only batch_id=-1 exists
+    assert ANN.batch_ids(spark, store) == [-1]  # only the train-time partition
     ANN.append_to_index(spark, store, late)
-    assert ANN._next_batch_id(spark, store) == 1
+    ANN.append_to_index(spark, store, late.limit(10))
+    assert ANN.batch_ids(spark, store) == [-1, 0, 1]
+    # the Hadoop FileSystem listing of the remote implementation agrees
+    listed = ANN._SparkStoreIO(spark, store).listdir("vectors")
+    assert [d for d in listed if d.startswith("batch_id=")] == [
+        d for d in ANN._ArrowStoreIO(store).listdir("vectors") if d.startswith("batch_id=")
+    ]
 
 
 def test_non_local_paths_fall_back(spark):
@@ -98,5 +124,36 @@ def test_non_local_paths_fall_back(spark):
     assert ANN._local_fs_path("s3a://bucket/store") is None
     assert ANN._local_fs_path("file:///tmp/x") == "/tmp/x"
     assert ANN._local_fs_path("/tmp/x") == "/tmp/x"
-    with pytest.raises(FileNotFoundError):
-        ANN._pa_read_rows("/tmp/definitely_missing_spark_graft_store")
+    assert isinstance(ANN._store_io(spark, "hdfs://nn/store"), ANN._SparkStoreIO)
+    assert isinstance(ANN._store_io(spark, "s3a://bucket/store"), ANN._SparkStoreIO)
+    assert isinstance(ANN._store_io(spark, "file:///tmp/x"), ANN._ArrowStoreIO)
+    missing = "/tmp/definitely_missing_spark_graft_store"
+    assert ANN.read_rows(spark, missing, "meta") is None
+    assert ANN._meta_dict(spark, missing) == {}
+    assert ANN.batch_ids(spark, missing) == []
+
+
+def test_lifecycle_through_spark_io_matches_pyarrow(spark, sf_dir, tmp_path, monkeypatch):
+    """Every verb of a spilled residual store with all control-plane IO
+    forced through the Spark implementation (the path a remote store
+    takes) leaves the same meta and serves the same rows as the pyarrow
+    path."""
+    from scripts_toolkit_spark.io.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base, late = emb.where("vec_id % 5 <> 0"), emb.where("vec_id % 5 = 0")
+
+    def lifecycle(path):
+        ANN.build_ann_index(base, path, n_home=2, residual=True, pq_n_codes=64)
+        ANN.append_to_index(spark, path, late)
+        pq_hits = ANN.search_index(spark, path, k=3, n_probe=3, use_pq=True).collect()
+        ANN.compact_index(spark, path)
+        ANN.retrain_index(spark, path)
+        hits = ANN.search_index(spark, path, k=3, n_probe=3).collect()
+        return sorted(map(tuple, pq_hits)), sorted(map(tuple, hits)), ANN._meta_dict(spark, path)
+
+    local = lifecycle(str(tmp_path / "local"))
+    monkeypatch.setattr(ANN, "_local_fs_path", lambda path: None)
+    remote = lifecycle("file://" + str(tmp_path / "remote"))
+    assert local[0] and local[1]
+    assert remote == local

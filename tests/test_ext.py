@@ -1043,68 +1043,6 @@ def test_ann_index_compact_and_delete(spark, sf_dir, tmp_path):
     assert all(r["neighbor_id"] % 7 != 0 and r["query_id"] % 7 != 0 for r in hits)
 
 
-def test_ann_index_pre_spill_store_lifecycle(spark, sf_dir, tmp_path):
-    """Advisor r10: a store written BEFORE the r10 spill port (no
-    probe_rank column, no {path}/meta) must keep working through EVERY
-    lifecycle verb — search already defaulted via _index_n_home, but
-    retrain/compact/delete referenced probe_rank unconditionally and
-    raised AnalysisException on upgrade. The shim injects rank 1 (a
-    pre-spill store is single-home by construction)."""
-    import shutil
-
-    from scripts_toolkit_spark.ext.ann_index import (
-        build_ann_index,
-        compact_index,
-        delete_from_index,
-        retrain_index,
-        search_index,
-    )
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "oldix")
-    build_ann_index(emb, path)
-
-    def strip(p):
-        # rewrite the store in the PRE-r10 layout: no probe_rank, no meta
-        old_rows = (
-            spark.read.parquet(p + "/vectors")
-            .select("vec_id", "embedding", "cell_id", "batch_id")
-            .localCheckpoint()
-        )
-        old_rows.write.mode("overwrite").partitionBy("batch_id").parquet(p + "/vectors")
-        shutil.rmtree(p + "/meta", ignore_errors=True)
-        assert "probe_rank" not in spark.read.parquet(p + "/vectors").columns
-
-    strip(path)
-    want = {tuple(r) for r in search_index(spark, path, k=3, n_probe=3).collect()}
-    assert want, "degenerate: empty search"
-    compact_index(spark, path)  # shim: compact on the old layout
-    assert {tuple(r) for r in search_index(spark, path, k=3, n_probe=3).collect()} == want
-
-    strip(path)
-    doomed = emb.where("vec_id % 11 = 0").select("vec_id")
-    delete_from_index(spark, path, doomed)  # shim: delete on the old layout
-    hits = search_index(spark, path, k=3, n_probe=3).collect()
-    assert hits and all(
-        r["neighbor_id"] % 11 != 0 and r["query_id"] % 11 != 0 for r in hits
-    )
-
-    strip(path)
-    retrain_index(spark, path)  # shim: retrain on the old layout
-    fresh_path = str(tmp_path / "freshix")
-    build_ann_index(emb.where("vec_id % 11 <> 0"), fresh_path)
-    got = {
-        (r["vec_id"], r["cell_id"])
-        for r in spark.read.parquet(path + "/vectors").collect()
-    }
-    ref = {
-        (r["vec_id"], r["cell_id"])
-        for r in spark.read.parquet(fresh_path + "/vectors").collect()
-    }
-    assert got == ref
-
-
 def test_ann_index_delete_keeps_codes_parity(spark, sf_dir, tmp_path):
     """Deleting from a codebook-built index must also prune /codes, so the
     compressed-domain search can never resurrect a deleted vector."""
@@ -1940,7 +1878,8 @@ def test_ann_index_two_level_matches_adhoc(spark, sf_dir, tmp_path):
     from pyspark.sql.window import Window
 
     from scripts_toolkit_spark.ext.ann_index import (
-        _index_two_level,
+        _meta_dict,
+        _meta_two_level,
         build_ann_index,
         search_index,
     )
@@ -1955,7 +1894,7 @@ def test_ann_index_two_level_matches_adhoc(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "twolevel")
     build_ann_index(emb, path, two_level=True)
-    assert _index_two_level(spark, path) == (True, 4)
+    assert _meta_two_level(_meta_dict(spark, path)) == (True, 4)
 
     normed = normalize_vectors(emb).localCheckpoint()
     n = normed.count()
@@ -2000,7 +1939,8 @@ def test_ann_index_two_level_append_and_retrain(spark, sf_dir, tmp_path):
     two-level (retrained store == fresh two-level build over the same
     corpus)."""
     from scripts_toolkit_spark.ext.ann_index import (
-        _index_two_level,
+        _meta_dict,
+        _meta_two_level,
         append_to_index,
         build_ann_index,
         retrain_index,
@@ -2031,7 +1971,7 @@ def test_ann_index_two_level_append_and_retrain(spark, sf_dir, tmp_path):
 
     # retrain in place == fresh two-level build over the full corpus
     retrain_index(spark, inc_path)
-    assert _index_two_level(spark, inc_path) == (True, 4)
+    assert _meta_two_level(_meta_dict(spark, inc_path)) == (True, 4)
     fresh_path = str(tmp_path / "fresh")
     build_ann_index(emb, fresh_path, two_level=True)
     re_rows = {
@@ -2262,72 +2202,6 @@ def test_two_level_residual_store_matches_flat(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(one2 + "/codes").collect()
     }
     assert inc_codes == one2_codes and inc_codes
-
-
-def test_ann_index_legacy_layout_store(spark, sf_dir, tmp_path):
-    """Back-compat guard for pre-r11 store layouts (round-11 verdict Next
-    #7 — the advisor's probe_rank lesson one layer up): a store with a
-    FLAT unpartitioned /codes dir and a meta row carrying ONLY n_home
-    (no residual / pq_seeded / two_level columns) must keep working
-    through search (both paths), append (which must keep the flat /codes
-    layout rather than corrupt it with partitioned subdirs), and
-    retrain."""
-    from scripts_toolkit_spark.ext.ann_index import (
-        append_to_index,
-        build_ann_index,
-        retrain_index,
-        search_index,
-    )
-    from scripts_toolkit_spark.ext.similarity import (
-        deterministic_centroids,
-        normalize_vectors,
-        pq_subspace_codebook,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.where("vec_id % 5 <> 0")
-    late = emb.where("vec_id % 5 = 0")
-    normed = normalize_vectors(base).localCheckpoint()
-    big = deterministic_centroids(normed, 64).localCheckpoint()
-    cents = big.where(F.col("cell_id") < 8).localCheckpoint()
-    cb = pq_subspace_codebook(
-        big.select(F.col("cell_id").alias("code"), "centroid"), m=4, sub_dim=16
-    ).localCheckpoint()
-
-    legacy = str(tmp_path / "legacy")
-    build_ann_index(base, legacy, centroids=cents, sub_codebook=cb)
-    ref_ivf = {tuple(r) for r in search_index(spark, legacy, k=3, n_probe=3).collect()}
-    ref_pq = {tuple(r) for r in search_index(
-        spark, legacy, k=3, n_probe=3, use_pq=True).collect()}
-
-    # rewrite to the r10 shape: flat /codes, one-column meta
-    flat_codes = spark.read.parquet(legacy + "/codes").drop("batch_id").localCheckpoint()
-    import shutil
-
-    shutil.rmtree(legacy + "/codes")
-    flat_codes.write.mode("overwrite").parquet(legacy + "/codes")
-    spark.createDataFrame([(1,)], "n_home int").write.mode("overwrite").parquet(
-        legacy + "/meta"
-    )
-
-    assert ref_ivf == {
-        tuple(r) for r in search_index(spark, legacy, k=3, n_probe=3).collect()
-    }
-    assert ref_pq == {
-        tuple(r) for r in search_index(
-            spark, legacy, k=3, n_probe=3, use_pq=True).collect()
-    }
-
-    # append keeps the flat /codes layout and both searches still run
-    append_to_index(spark, legacy, late)
-    codes_after = spark.read.parquet(legacy + "/codes")
-    assert "batch_id" not in codes_after.columns
-    assert codes_after.count() == spark.read.parquet(legacy + "/vectors").count()
-    assert search_index(spark, legacy, k=3, n_probe=3, use_pq=True).count() > 0
-
-    # retrain rewrites in place and the store stays searchable
-    retrain_index(spark, legacy)
-    assert search_index(spark, legacy, k=3, n_probe=3).count() > 0
 
 
 def test_filtered_topk_same_attr_only_and_exhaustive_exact(spark, sf_dir):

@@ -58,10 +58,10 @@ def main():
     # replicate search_index(use_pq=True) stage by stage
     cents = spark.read.parquet(path + "/centroids")
     store = spark.read.parquet(path + "/vectors")
-    n_home, _res = ANN._index_meta(spark, path)
+    n_home, _res = ANN._meta_n_home_residual(ANN._meta_dict(spark, path))
     home = store.where(F.col("probe_rank") == 1)
     q_normed = home.select("vec_id", "embedding")
-    cb_np, m, n_codes, sub_dim = ANN._collect_codebook(spark.read.parquet(path + "/codebook"))
+    cb_np, m, n_codes, sub_dim = ANN._codebook_from_rows(ANN._codebook_rows(spark, path))
     cent_np, cent_pos = ANN._collect_centroids(cents)
 
     def stage_assign():
