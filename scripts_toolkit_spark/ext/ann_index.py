@@ -76,6 +76,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import NamedTuple
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -406,41 +407,105 @@ def _collect_centroids(centroids: DataFrame):
     return _cent_np_pos_from_rows(_centroid_rows(centroids))
 
 
+class _Model(NamedTuple):
+    """A store's model as one verb call sees it: the /meta dict, the
+    /centroids frame, the driver-held flat centroid rows (None on a
+    two-level or over-cap model) and the codebook rows (None on an
+    IVF-only store)."""
+
+    meta: dict
+    cents: DataFrame
+    cent_rows: list | None
+    cb_rows: list | None
+
+    @property
+    def n_home(self) -> int:
+        return _meta_n_home_residual(self.meta)[0]
+
+
+def read_model(spark: SparkSession, path: str, use_pq: bool = False) -> _Model:
+    """The model stored at `path`, read through the control-plane seam:
+    on a local store the only Spark job is the /centroids frame's schema
+    read. Every verb call and every stream batch reads it afresh, so each
+    works against the model the last `build_ann_index` / `retrain_index`
+    wrote. `use_pq=True` callers search the compressed codes and get a
+    ValueError on a store without a PQ model."""
+    meta = _meta_dict(spark, path)
+    cb_rows = _codebook_rows(spark, path)
+    if use_pq and cb_rows is None:
+        raise ValueError(
+            f"use_pq=True requires a codebook-built index ({path}/codebook is missing)"
+        )
+    return _Model(
+        meta,
+        spark.read.parquet(path + "/centroids"),
+        _centroid_rows_from_store(spark, path, meta),
+        cb_rows,
+    )
+
+
+def _write_model(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    dim: int,
+    cent_rows: list | None,
+    cents: DataFrame | None,
+    cb_rows: list | None,
+) -> _Model:
+    """Persist a freshly picked model's centroids and meta (build,
+    retrain) and return the model the corpus is then assigned against.
+    Driver-held rows go through the control-plane seam; a corpus-lineage
+    pick (two-level threshold) or a caller's frame (e.g. Lloyd-refined)
+    is written as a frame, and its write/read-back is the lineage
+    boundary. Meta records the REALIZED shape (n_cells, dim) so serving
+    verbs skip the stats job — a stale count would change a two-level
+    store's super pick; a footer count when the rows are not driver-held."""
+    if cent_rows is not None:
+        write_rows(spark, path, "centroids", cent_rows)
+    else:
+        cents.write.mode("overwrite").parquet(path + "/centroids")
+    n_cells = len(cent_rows) if cent_rows is not None else row_count(spark, path, "centroids")
+    meta = dict(meta, n_cells=n_cells, dim=int(dim))
+    _write_meta(spark, path, meta)
+    return _Model(meta, spark.read.parquet(path + "/centroids"), cent_rows, cb_rows)
+
+
 def _assign_stored(
     vectors: DataFrame,
-    cents: DataFrame,
+    model: _Model,
     n_probe: int,
-    meta: dict,
-    cent_rows: list | None,
-    id_col: str,
-    vec_col: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    normalize: bool = False,
 ) -> DataFrame:
-    """Rank-annotated assignment of unit vectors against the STORED model,
-    routed by the store's meta: coarse-to-fine on a two-level store
-    (r12 — never collects the centroid set), the literal-codebook kernel
-    otherwise (`cent_rows` when the caller holds them skip its collect).
-    The meta shape skips the per-call stats job (r14)."""
-    two_level, super_probe = _meta_two_level(meta)
-    n_cells, dim = _meta_shape(meta)
+    """Rank-annotated assignment (id, vec, cell_id, is_home, probe_rank)
+    of vectors to their `n_probe` nearest STORED cells, routed by the
+    store's meta: coarse-to-fine on a two-level store (it never collects
+    the centroid set), the literal-codebook kernel otherwise (driver-held
+    centroid rows skip its collect). The meta shape skips the per-call
+    stats job. `normalize=True` takes raw vectors and unit-normalizes
+    them first; stored rows are unit-norm already."""
+    if normalize:
+        vectors = normalize_vectors(vectors, id_col, vec_col)
+    two_level, super_probe = _meta_two_level(model.meta)
+    n_cells, dim = _meta_shape(model.meta)
     if two_level:
         return ivf_assign_two_level(
-            vectors, cents, super_probe=super_probe, n_probe=n_probe,
+            vectors, model.cents, super_probe=super_probe, n_probe=n_probe,
             id_col=id_col, vec_col=vec_col, with_rank=True,
             n_cells=n_cells, dim=dim,
         )
     return ivf_assign(
-        vectors, cents, n_probe, id_col, vec_col, with_rank=True,
-        n_cells=n_cells, dim=dim, centroid_rows=cent_rows,
+        vectors, model.cents, n_probe, id_col, vec_col, with_rank=True,
+        n_cells=n_cells, dim=dim, centroid_rows=model.cent_rows,
     )
 
 
 def _encode_codes(
     stored: DataFrame,
     path: str,
-    cb_rows: list,
-    meta: dict,
-    cents: DataFrame,
-    cent_rows: list | None,
+    model: _Model,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
@@ -452,13 +517,12 @@ def _encode_codes(
     STORED COPY so /codes keeps row-parity with /vectors on both search
     paths; the encode joins the stored {path}/codebook frame. RESIDUAL
     codes are per copy (`_encode_codes_residual`)."""
-    residual = _meta_n_home_residual(meta)[1]
-    if residual:
+    if _meta_n_home_residual(model.meta)[1]:
         return _encode_codes_residual(
-            stored, cb_rows, cents, id_col, vec_col,
-            distributed=_meta_two_level(meta)[0], cent_rows=cent_rows,
+            stored, model.cb_rows, model.cents, id_col, vec_col,
+            distributed=_meta_two_level(model.meta)[0], cent_rows=model.cent_rows,
         )
-    _cb_np, m, _n_codes, sub_dim = _codebook_from_rows(cb_rows)
+    _cb_np, m, _n_codes, sub_dim = _codebook_from_rows(model.cb_rows)
     codebook = stored.sparkSession.read.parquet(path + "/codebook")
     home = stored.where(F.col("probe_rank") == 1).select(id_col, vec_col)
     return pq_code_arrays(home, codebook, m, sub_dim, id_col, vec_col).join(
@@ -513,6 +577,46 @@ def _encode_codes_residual(
             residual=True, cent_np=cent_np, cent_pos=cent_pos, with_codes=True,
         )
     return coded.select(id_col, "ncodes", "cell_id", "probe_rank")
+
+
+def _write_stored(
+    spark: SparkSession,
+    path: str,
+    stored: DataFrame,
+    batch_id: int,
+    model: _Model,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Write one batch of stored rows (id, vec, cell_id, probe_rank) as
+    the {path}/vectors partition `batch_id` and, when the store has a PQ
+    model, its encoded rows as the matching {path}/codes partition — the
+    store's only writer of either sink, so /codes keeps row parity with
+    /vectors. The encode reads the just-written partition back: the
+    parquet write is the materialization boundary (no checkpoint job),
+    and parquet round-trips doubles exactly, so the codes are
+    bit-identical to encoding the rows in memory.
+
+    batch_id -1 stamps the whole corpus train-time and overwrites both
+    sinks (build, retrain). Any other id dynamically overwrites that one
+    partition (append, stream), so a replayed batch rewrites its own rows
+    instead of adding them twice."""
+
+    def _write(rows: DataFrame, sub: str) -> None:
+        w = rows.withColumn("batch_id", F.lit(batch_id).cast("bigint")).write.mode("overwrite")
+        if batch_id != -1:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.partitionBy("batch_id").parquet(f"{path}/{sub}")
+
+    cols = [id_col, vec_col, "cell_id", "probe_rank"]
+    _write(stored.select(*cols), "vectors")
+    if model.cb_rows is not None:
+        written = (
+            spark.read.parquet(path + "/vectors")
+            .where(F.col("batch_id") == batch_id)
+            .select(*cols)
+        )
+        _write(_encode_codes(written, path, model, id_col, vec_col), "codes")
 
 
 def build_ann_index(
@@ -620,8 +724,8 @@ def build_ann_index(
         )
     pq_seeded = bool(residual and sub_codebook is None)
     n_codes = None
-    cent_rows = None  # driver-held centroid rows when the pick is exact (r14)
-    cb_rows = None  # driver-held codebook rows: every PQ build holds them (r15)
+    cent_rows = None  # driver-held centroid rows when the pick is exact
+    cb_rows = None  # driver-held codebook rows: every PQ build holds them
     if pq_seeded:
         # SEEDED residual codebook, bit-identical to ivfpq_topk's: ONE
         # md5 pick serves the centroids AND the codebook seeds (the pick
@@ -635,9 +739,7 @@ def build_ann_index(
                 id_col, vec_col, n_rows=n_rows,
             )
         else:
-            # caller-provided model: seeds' homes computed against IT. The
-            # seeds come straight off `exact_pick_rows` (r14 — the former
-            # shape created the pick frame and re-collected it)
+            # caller-provided model: seeds' homes computed against IT
             big_rows = exact_pick_rows(
                 normed, max(n_cells or 0, n_codes), id_col, vec_col, n_rows=n_rows
             )
@@ -655,8 +757,8 @@ def build_ann_index(
             )
         else:
             # the exact pick collects its survivors anyway — keep the
-            # rows (r14): they feed the assign kernel, the meta shape,
-            # and the single-file /centroids write below
+            # rows: they feed the assign kernel, the meta shape, and the
+            # single-file /centroids write
             cent_rows = exact_pick_rows(
                 normed, n_cells, id_col, vec_col, n_rows=n_rows
             )
@@ -667,20 +769,8 @@ def build_ann_index(
             (int(r["s"]), int(r["code"]), list(r["csub"]))
             for r in sub_codebook.collect()
         )
-    # Driver-held model rows go through the control-plane seam (r15: zero
-    # Spark jobs on a local store). A corpus-lineage pick (two-level
-    # threshold) or a caller-provided frame (e.g. Lloyd-refined) is
-    # written as a frame; the parquet write/read-back is its lineage
-    # boundary.
-    if cent_rows is not None:
-        write_rows(spark, path, "centroids", cent_rows)
-    else:
-        centroids.write.mode("overwrite").parquet(path + "/centroids")
-    centroids = spark.read.parquet(path + "/centroids")
     # the build-time knobs are INDEX properties: persist them so append/
-    # search/retrain/streaming read the same config without re-threading,
-    # with the stored model's REALIZED shape (r14; a footer count when the
-    # rows are not driver-held)
+    # search/retrain/streaming read the same config without re-threading
     meta = {
         "n_home": int(n_home),
         "residual": bool(residual),
@@ -690,54 +780,19 @@ def build_ann_index(
         "sub_dim": int(sub_dim) if pq_seeded else None,
         "two_level": bool(two_level),
         "super_probe": int(super_probe),
-        "n_cells": len(cent_rows) if cent_rows is not None
-        else row_count(spark, path, "centroids"),
-        "dim": int(dim),
     }
-    _write_meta(spark, path, meta)
-    # n_home rows per vector, rank 1 = home
-    stored = _assign_stored(
-        normed, centroids, n_home, meta, cent_rows, id_col, vec_col
-    ).select(id_col, vec_col, "cell_id", "probe_rank")
-    # train-time rows are stamped batch_id = -1 and the store is partitioned
-    # by batch_id, so the streaming ingester's `batch_id < current` prior-
-    # store filter sees the pre-built corpus (it would silently project NULL
-    # and drop every row from cross-batch matching otherwise) and the
-    # layout stays uniform when appends land as batch_id=N subdirs
-    (
-        stored.withColumn("batch_id", F.lit(-1).cast("bigint"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(path + "/vectors")
-    )
     if cb_rows is not None:
-        # persist the PQ model AND the compressed corpus: m ints/vector is
-        # the frame the compressed-domain search joins at 100 TB. Codes
-        # mirror /vectors' batch_id partitioning (r11) so the streaming
-        # ingester's compressed path overwrites per-partition exactly-once.
-        # The codebook is n_codes·m rows (KB at any N, by contract), so a
-        # single-file write is scale-safe and makes every later read a
-        # one-task read (r14).
+        # the codebook is n_codes·m rows (KB at any N, by contract): a
+        # single-file control write, one-task reads after
         write_rows(spark, path, "codebook", cb_rows)
-        # the codes encode reads the JUST-WRITTEN corpus back (r15 —
-        # round-14 verdict Next #3 "reuse the assign output"): the
-        # parquet write IS the materialization boundary, so no extra
-        # localCheckpoint job; parquet round-trips doubles exactly →
-        # bit-identical codes
-        stored_rb = (
-            spark.read.parquet(path + "/vectors")
-            .where(F.col("batch_id") == -1)
-            .select(id_col, vec_col, "cell_id", "probe_rank")
-        )
-        codes = _encode_codes(
-            stored_rb, path, cb_rows, meta, centroids, cent_rows, id_col, vec_col
-        )
-        (
-            codes.withColumn("batch_id", F.lit(-1).cast("bigint"))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(path + "/codes")
-        )
+    model = _write_model(spark, path, meta, dim, cent_rows, centroids, cb_rows)
+    # n_home rows per vector, rank 1 = home. Train-time rows are stamped
+    # batch_id = -1, so the streaming ingester's `batch_id < current`
+    # prior-store filter sees the pre-built corpus.
+    _write_stored(
+        spark, path, _assign_stored(normed, model, n_home, id_col, vec_col), -1,
+        model, id_col, vec_col,
+    )
     return spark.read.parquet(path + "/vectors")
 
 
@@ -759,52 +814,129 @@ def append_to_index(
     index (meta n_home > 1) spills the late batch the same way — the
     appended copies are row-identical to a one-shot spilled build.
     Returns the updated corpus frame."""
-    cents = spark.read.parquet(path + "/centroids")
-    meta = _meta_dict(spark, path)  # ONE meta read per verb (r14, driver-side r15)
-    n_home = _meta_n_home_residual(meta)[0]
-    # flat store: the centroid rows come off the control-plane read (r15)
-    # so the assign kernel skips its own collect job; `cents` stays the
-    # schema/fallback anchor
-    cent_rows_l = _centroid_rows_from_store(spark, path, meta)
-    # repartition the late batch BEFORE the normalize+assign projection —
-    # the build's own discipline (r15): a single-file batch arrives as
-    # 1-2 scan partitions and the Arrow assign kernel otherwise rides
-    # that narrow stage (measured 0.30 s single-task at sf0.1); the
-    # shuffle moves the batch's bytes once and the kernel runs
-    # cluster-wide. Mirrors build_ann_index's repartition(par).
+    model = read_model(spark, path)
+    # repartition the late batch BEFORE the normalize+assign projection,
+    # as the build does: a single-file batch arrives as 1-2 scan
+    # partitions and the Arrow assign kernel otherwise rides that narrow
+    # stage (measured 0.30 s single-task at sf0.1); the shuffle moves the
+    # batch's bytes once and the kernel runs cluster-wide
     par = spark.sparkContext.defaultParallelism
-    normed = normalize_vectors(new_vectors.repartition(par), id_col, vec_col)
-    # a two-level-built store (meta two_level, r12) routes the late batch
-    # coarse-to-fine as well: appends never collect the stored centroids
     assigned = _assign_stored(
-        normed, cents, n_home, meta, cent_rows_l, id_col, vec_col
-    ).select(id_col, vec_col, "cell_id", "probe_rank")
-    next_batch = max(batch_ids(spark, path), default=-1) + 1
-    cb_rows = _codebook_rows(spark, path)
-    (
-        assigned.withColumn("batch_id", F.lit(next_batch).cast("bigint"))
-        .write.mode("append")
-        .partitionBy("batch_id")
-        .parquet(path + "/vectors")
+        new_vectors.repartition(par), model, model.n_home, id_col, vec_col, normalize=True
     )
-    if cb_rows is not None:
-        # encode the JUST-WRITTEN batch partition (r15): the append write
-        # is the materialization boundary — the former localCheckpoint
-        # job before the two consumers disappears, and partition pruning
-        # reads back exactly this batch's rows (bit-identical doubles)
-        batch_rb = (
-            spark.read.parquet(path + "/vectors")
-            .where(F.col("batch_id") == next_batch)
-            .select(id_col, vec_col, "cell_id", "probe_rank")
-        )
-        (
-            _encode_codes(batch_rb, path, cb_rows, meta, cents, cent_rows_l, id_col, vec_col)
-            .withColumn("batch_id", F.lit(next_batch).cast("bigint"))
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(path + "/codes")
-        )
+    next_batch = max(batch_ids(spark, path), default=-1) + 1
+    _write_stored(spark, path, assigned, next_batch, model, id_col, vec_col)
     return spark.read.parquet(path + "/vectors")
+
+
+def _rank_probed(
+    probes: DataFrame,
+    queries: DataFrame,
+    vectors: DataFrame,
+    codes: DataFrame | None,
+    model: _Model,
+    k: int,
+    rerank_factor: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Per-query top-k (query_id, neighbor_id, rank, cos_sim) over the
+    stored rows of each query's probed cells — the search core of
+    `search_index` and of the streaming ingester's cross-batch match.
+
+    `probes` is an `_assign_stored` frame, one row per (query, probed
+    cell); `queries` holds one unit vector per query; `vectors` are the
+    corpus /vectors rows to search. Candidates come from ALL stored
+    copies of a spilled store (that is the recall lift); the rerank legs
+    read HOME rows only, and (query, neighbor) pairs dedup before ranking.
+
+    Given the corpus /codes rows (`codes`; None ranks exact cosine), it
+    scores the stored m-int codes by ADC (`attach_pq_lut`, the
+    `ivfpq_topk` kernel) and exact-reranks the shortlist union against
+    the raw vectors (`_pq_rank`). A RESIDUAL store's codes are
+    per stored copy, so the query side builds one LUT per (query, probed
+    cell) from its residual wrt that cell and the LUT join keys on
+    (query, cell)."""
+    n_home, residual = _meta_n_home_residual(model.meta)
+    if codes is None:
+        qa = probes.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "cell_id"
+        )
+        corpus = vectors.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "cell_id"
+        )
+        pairs = (
+            qa.join(corpus, "cell_id")
+            .where(F.col("query_id") != F.col("neighbor_id"))
+            .select("query_id", "neighbor_id", "qv", "cv")
+        )
+        # candidate scoring is MODE-CONDITIONAL (measured, the ivf_topk
+        # A/B): n_home == 1 routes through the Arrow dot kernel (the
+        # interpreted fold's dim lambda steps per pair dominate); a spilled
+        # store's doubled candidate volume makes shipping qv+cv through the
+        # Python boundary cost more than the in-place fold saves. Identical
+        # bits either way; unit-norm ⇒ dot is cos.
+        if n_home > 1:
+            # a pair can arise from up to n_home shared cells, each copy
+            # scoring the identical dot — dedup before ranking
+            scored = pairs.select(
+                "query_id", "neighbor_id", _dot(F.col("qv"), F.col("cv")).alias("cos_sim")
+            ).dropDuplicates(["query_id", "neighbor_id"])
+        else:
+            scored = _dot_rows_kernel(pairs, "qv", "cv", out_col="cos_sim")
+        w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select(
+                "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"),
+                "cos_sim",
+            )
+        )
+    cb_np, m, n_codes, sub_dim = _codebook_from_rows(model.cb_rows)
+    if residual and _meta_two_level(model.meta)[0]:
+        # a two-level store equi-joins each probed cell's centroid from the
+        # centroid FRAME — no O(n_cells) driver collect; bit-identical LUTs
+        # (attach_pq_lut centroid_col docstring)
+        cent = model.cents.select("cell_id", F.col("centroid").alias("__cent"))
+        lutted = attach_pq_lut(
+            probes.join(cent, "cell_id"), cb_np, m, n_codes, sub_dim, vec_col,
+            residual=True, centroid_col="__cent",
+        ).drop("__cent")
+    elif residual:
+        cent_np, cent_pos = (
+            _cent_np_pos_from_rows(model.cent_rows)
+            if model.cent_rows is not None
+            else _collect_centroids(model.cents)
+        )
+        lutted = attach_pq_lut(
+            probes, cb_np, m, n_codes, sub_dim, vec_col,
+            residual=True, cent_np=cent_np, cent_pos=cent_pos,
+        )
+    else:
+        lutted = attach_pq_lut(probes, cb_np, m, n_codes, sub_dim, vec_col)
+    lutted = lutted.transform(_materialize)
+    if residual:
+        qlut = lutted.select(F.col(id_col).alias("query_id"), "cell_id", "lut")
+        qlut_keys = ["query_id", "cell_id"]
+    else:
+        qlut = lutted.where(F.col("is_home")).select(F.col(id_col).alias("query_id"), "lut")
+        qlut_keys = ["query_id"]
+    queries_f = lutted.select(F.col(id_col).alias("query_id"), "cell_id")
+    corpus_codes = codes.select(F.col(id_col).alias("neighbor_id"), "cell_id", "ncodes")
+    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    home = vectors.where(F.col("probe_rank") == 1) if n_home > 1 else vectors
+    nv = home.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
+    # the gather shape is mode-conditional: residual pre-gathers the
+    # stored codes per cell (its (query, cell)-keyed LUT join made the
+    # streamed shape re-shuffle the full candidate volume), plain streams
+    # the candidate join through a hash aggregate (pre-gathering
+    # regressed the plain family 1.5–1.8×). Bit-identical rows either
+    # way; see the `_pq_rank` docstring (ext/similarity.py).
+    return _pq_rank(
+        queries_f, qlut, qlut_keys, corpus_codes, qv, nv,
+        m, n_codes, k, rerank_factor, n_home, pre_gather=residual,
+    )
 
 
 def search_index(
@@ -837,7 +969,7 @@ def search_index(
     against the stored raw vectors. With the same model inputs this
     returns EXACTLY `ivfpq_topk`'s rows (bit-identical LUT/argmin —
     pinned by test_stored_pq_search_equals_ivfpq). On a RESIDUAL-built
-    index (meta residual = true, r11) the stored codes are per-copy
+    index (meta residual = true) the stored codes are per-copy
     residual codes, so the query side builds ONE LUT PER PROBED CELL
     from its own residual wrt that cell and the LUT join keys on
     (query, cell) — bit-identical to
@@ -846,133 +978,18 @@ def search_index(
 
     The probe assignment is the literal-codebook kernel (no shuffle); the
     only shuffles are the cell_id equi-join, the gather, and the
-    per-query top-k."""
-    cents = spark.read.parquet(path + "/centroids")
+    per-query top-k. The ranking itself is `_rank_probed`."""
+    model = read_model(spark, path, use_pq)
     store = spark.read.parquet(path + "/vectors")
-    meta = _meta_dict(spark, path)  # ONE meta read per verb (r14, driver-side r15)
-    n_home, residual = _meta_n_home_residual(meta)
-    two_level, super_probe = _meta_two_level(meta)
-    n_cells_m, dim_m = _meta_shape(meta)  # skips the per-verb stats job (r14)
-    # flat store: centroid rows off the control-plane read (r15) — the
-    # probe assign and the residual LUT leg skip their collect jobs
-    cent_rows_l = _centroid_rows_from_store(spark, path, meta)
-    # home rows = exactly one row per stored vector: the query leg (and
-    # the PQ rerank's raw-vector legs) must never see spilled copies —
-    # duplicate query/neighbor rows would corrupt the per-query ranking
-    home = store.where(F.col("probe_rank") == 1) if n_home > 1 else store
     if queries is None:
+        # one query per stored vector: the HOME rows
+        home = store.where(F.col("probe_rank") == 1) if model.n_home > 1 else store
         q_normed = home.select(id_col, vec_col)
     else:
         q_normed = normalize_vectors(queries, id_col, vec_col)
-    # a two-level store probes coarse-to-fine: the query-side assignment
-    # never collects the stored centroid set either (r12)
-    qa0 = (
-        ivf_assign_two_level(
-            q_normed, cents, super_probe=super_probe, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col, n_cells=n_cells_m, dim=dim_m,
-        )
-        if two_level
-        else ivf_assign(
-            q_normed, cents, n_probe, id_col, vec_col,
-            n_cells=n_cells_m, dim=dim_m, centroid_rows=cent_rows_l,
-        )
-    )
-    if not use_pq:
-        qa = qa0.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "cell_id"
-        )
-        corpus = store.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "cell_id"
-        )
-        # candidate scoring is MODE-CONDITIONAL (r14, measured — the
-        # ivf_topk A/B): n_home == 1 routes through the Arrow dot kernel
-        # (the interpreted fold's dim lambda steps per pair dominate);
-        # a spilled store's doubled candidate volume makes shipping
-        # qv+cv through the Python boundary cost more than the in-place
-        # fold saves. Identical bits either way; unit-norm ⇒ dot is cos.
-        pairs = (
-            qa.join(corpus, "cell_id")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", "qv", "cv")
-        )
-        if n_home > 1:
-            scored = pairs.select(
-                "query_id",
-                "neighbor_id",
-                _dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
-            )
-        else:
-            scored = _dot_rows_kernel(pairs, "qv", "cv", out_col="cos_sim")
-        if n_home > 1:
-            # a pair can arise from up to n_home shared cells, each copy
-            # scoring the identical dot — dedup before ranking
-            scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"),
-                "cos_sim",
-            )
-        )
-    cb_rows = _codebook_rows(spark, path)
-    if cb_rows is None:
-        raise ValueError(f"use_pq=True requires a codebook-built index ({path}/codebook is missing)")
-    cb_np, m, n_codes, sub_dim = _codebook_from_rows(cb_rows)
-    if residual:
-        # one LUT per (query, probed cell), each from the query's residual
-        # wrt that cell — matching the stored per-copy residual codes. On
-        # a TWO-LEVEL store (r14 — round-13 verdict Next #2) the probed
-        # cell's centroid comes from an equi-join against the stored
-        # centroid FRAME — no O(n_cells) driver collect; bit-identical
-        # LUTs (attach_pq_lut centroid_col docstring).
-        if two_level:
-            cent = cents.select("cell_id", F.col("centroid").alias("__cent"))
-            assigned = attach_pq_lut(
-                qa0.join(cent, "cell_id"), cb_np, m, n_codes, sub_dim, vec_col,
-                residual=True, centroid_col="__cent",
-            ).drop("__cent").transform(_materialize)
-        else:
-            # rows already driver-held (cell-sorted) — same matrix
-            # `_collect_centroids` would re-collect (r15)
-            cent_np, cent_pos = (
-                _cent_np_pos_from_rows(cent_rows_l)
-                if cent_rows_l is not None
-                else _collect_centroids(cents)
-            )
-            assigned = attach_pq_lut(
-                qa0, cb_np, m, n_codes, sub_dim, vec_col,
-                residual=True, cent_np=cent_np, cent_pos=cent_pos,
-            ).transform(_materialize)
-        qlut = assigned.select(F.col(id_col).alias("query_id"), "cell_id", "lut")
-        qlut_keys = ["query_id", "cell_id"]
-    else:
-        assigned = attach_pq_lut(qa0, cb_np, m, n_codes, sub_dim, vec_col).transform(
-            _materialize
-        )
-        qlut = assigned.where(F.col("is_home")).select(
-            F.col(id_col).alias("query_id"), "lut"
-        )
-        qlut_keys = ["query_id"]
-    queries_f = assigned.select(F.col(id_col).alias("query_id"), "cell_id")
-    corpus_codes = spark.read.parquet(path + "/codes").select(
-        F.col(id_col).alias("neighbor_id"), "cell_id", "ncodes"
-    )
-    # rerank legs read HOME rows only — one raw vector per id
-    qv = q_normed.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    nv = home.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    # gather shape is mode-conditional (r14): residual pre-gathers the
-    # stored codes per cell (its (query, cell)-keyed LUT join made the
-    # streamed shape re-shuffle the full candidate volume — the r13 win,
-    # 6.9 → 4.0 s serving), plain streams the candidate join through a
-    # hash aggregate (the r13 pre-gather regressed the plain family
-    # 1.5–1.8× — round-13 verdict "What's wrong" #1). Bit-identical rows
-    # either way; see the `_pq_rank` docstring (ext/similarity.py).
-    return _pq_rank(
-        queries_f, qlut, qlut_keys, corpus_codes, qv, nv,
-        m, n_codes, k, rerank_factor, n_home, pre_gather=residual,
-    )
+    probes = _assign_stored(q_normed, model, n_probe, id_col, vec_col)
+    codes = spark.read.parquet(path + "/codes") if use_pq else None
+    return _rank_probed(probes, q_normed, store, codes, model, k, rerank_factor, id_col, vec_col)
 
 
 def index_health(
@@ -1139,7 +1156,7 @@ def retrain_index(
     at build time) — for those stores retrain==fresh-build holds when
     the fresh build receives the same codebook explicitly. Returns the
     rewritten corpus frame."""
-    meta = _meta_dict(spark, path)  # ONE meta read per verb (r14)
+    meta = _meta_dict(spark, path)
     n_home, residual = _meta_n_home_residual(meta)
     two_level, _sp = _meta_two_level(meta)
     # re-pick/re-assign over one row per VECTOR (home rows) — the spilled
@@ -1154,7 +1171,7 @@ def retrain_index(
     if n_cells is None:
         n_cells = auto_n_cells(snap, n_rows=n_rows)
     pq_seeded, pq_n_codes, meta_m, meta_sub_dim = _meta_seeded_pq(meta)
-    cent_rows = None
+    cents = cent_rows = None
     if pq_seeded and residual:
         # the build SELF-CONSTRUCTED its seeded residual codebook (params
         # in meta): rebuild it from the NEW pick over the current corpus,
@@ -1175,44 +1192,11 @@ def retrain_index(
             cents = threshold_centroids(snap, n_cells, id_col, vec_col, n_rows=n_rows)
         else:
             cent_rows = exact_pick_rows(snap, n_cells, id_col, vec_col, n_rows=n_rows)
-    if cent_rows is not None:
-        write_rows(spark, path, "centroids", cent_rows)
-    else:
-        cents.write.mode("overwrite").parquet(path + "/centroids")
-    cents = spark.read.parquet(path + "/centroids")
-    # the model SHAPE changed with the re-pick: refresh meta's realized
-    # (n_cells, dim) so later verbs keep skipping the stats job against
-    # the CURRENT model (r14 — a stale count would change a two-level
-    # store's super pick)
-    meta = dict(
-        meta,
-        n_cells=len(cent_rows) if cent_rows is not None
-        else row_count(spark, path, "centroids"),
-        dim=int(dim),
+    # the re-pick changed the model's shape: meta's realized (n_cells, dim)
+    # is refreshed with the new centroids
+    model = _write_model(spark, path, meta, dim, cent_rows, cents, cb_rows)
+    _write_stored(
+        spark, path, _assign_stored(snap, model, n_home, id_col, vec_col), -1,
+        model, id_col, vec_col,
     )
-    _write_meta(spark, path, meta)
-    stored = _assign_stored(
-        snap, cents, n_home, meta, cent_rows, id_col, vec_col
-    ).select(id_col, vec_col, "cell_id", "probe_rank")
-    (
-        stored.withColumn("batch_id", F.lit(-1).cast("bigint"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(path + "/vectors")
-    )
-    if cb_rows is not None:
-        # encode the just-rewritten corpus (r15): the overwrite IS the
-        # materialization boundary — no extra localCheckpoint job
-        stored_rb = (
-            spark.read.parquet(path + "/vectors")
-            .where(F.col("batch_id") == -1)
-            .select(id_col, vec_col, "cell_id", "probe_rank")
-        )
-        (
-            _encode_codes(stored_rb, path, cb_rows, meta, cents, cent_rows, id_col, vec_col)
-            .withColumn("batch_id", F.lit(-1).cast("bigint"))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(path + "/codes")
-        )
     return spark.read.parquet(path + "/vectors")

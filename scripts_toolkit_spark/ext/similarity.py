@@ -1596,8 +1596,9 @@ def _pq_rank(
     pre_gather: bool = False,
 ) -> DataFrame:
     """The compressed-domain candidate→top-k pipeline shared by
-    `ivfpq_topk`, `ann_index.search_index(use_pq=True)`, and the
-    streaming ingester's PQ match (streaming/ann_stream.py): gather each
+    `ivfpq_topk` and the stored index's ranking core
+    (`ann_index._rank_probed`, which serves `search_index(use_pq=True)`
+    and the streaming ingester's PQ match): gather each
     probe row's candidates (with their m-code arrays), join the query's
     LUT, self-pair filter, ADC as array expressions (fixed s-ascending
     sum — bit-reproducible), per-(query, cell) top-(rerank_factor·k)

@@ -7,6 +7,7 @@ everything ingested before it."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from scripts_toolkit_spark.ext.ann_index import build_ann_index
@@ -198,88 +199,175 @@ def test_ann_ingest_replay_idempotent(spark, sf_dir, tmp_path):
     assert matches1 == matches2
 
 
-def test_stream_pq_residual_spilled_matches_and_parity(spark, sf_dir, tmp_path):
-    """Round-10 verdict Next #2: the streaming cross-batch match must be
-    able to search the STORED COMPRESSED CODES — the shape a 100 TB
-    serving store runs — composed with the full best-recall store config
-    (use_pq=True × residual=True × n_home=2). Contract:
+def _plain_codebook(spark, emb):
+    """A fixed-size PLAIN codebook (64 codes, m=4, sub_dim=16) trained on
+    the whole corpus, as a two-level store takes it."""
+    from scripts_toolkit_spark.ext.similarity import pq_subspace_codebook
 
-      - per-batch matches == `search_index(use_pq=True)` with the batch
-        as external queries over a reference store holding exactly the
-        PRIOR batches (stream==batch parity on the compressed path),
-      - the final /vectors AND /codes are row-identical to a
-        build+append chain with the same stored model (codes parity
-        covers the per-copy residual encoding of streamed batches),
+    normed = normalize_vectors(emb).localCheckpoint()
+    picks = deterministic_centroids(normed, 64).select(
+        F.col("cell_id").alias("code"), "centroid"
+    )
+    return pq_subspace_codebook(picks, 4, 16).localCheckpoint()
+
+
+def _residual_codebook(spark, emb):
+    """A caller-provided RESIDUAL codebook (the seeded construction over
+    16 cells, 64 codes, m=4, sub_dim=16), as a two-level store takes it."""
+    from scripts_toolkit_spark.ext.ann_index import _seeded_residual_model
+
+    normed = normalize_vectors(emb).localCheckpoint()
+    _cents, cb, _rows, _cb_rows = _seeded_residual_model(
+        spark, normed, 16, 64, 4, 16, "vec_id", "embedding"
+    )
+    return cb.localCheckpoint()
+
+
+# store composition -> (build kwargs, use_pq, codebook factory or None)
+STORE_COMPOSITIONS = {
+    "ivf": ({}, False, None),
+    "ivf_spilled": ({"n_home": 2}, False, None),
+    "two_level_ivf": ({"two_level": True}, False, None),
+    "two_level_pq": ({"two_level": True}, True, _plain_codebook),
+    "two_level_residual": ({"two_level": True, "residual": True}, True, _residual_codebook),
+    "residual_spilled_pq": (
+        {"n_cells": 8, "n_home": 2, "residual": True, "pq_n_codes": 64, "m": 4, "sub_dim": 16},
+        True,
+        None,
+    ),
+}
+
+
+def _vec_rows(spark, path):
+    return {
+        (r["vec_id"], r["cell_id"], r["probe_rank"], tuple(r["embedding"]))
+        for r in spark.read.parquet(path + "/vectors").collect()
+    }
+
+
+def _code_rows(spark, path):
+    return {
+        (r["vec_id"], r["cell_id"], r["probe_rank"], tuple(r["ncodes"]))
+        for r in spark.read.parquet(path + "/codes").collect()
+    }
+
+
+def _match_rows(spark, matches_path, batch_id):
+    return {
+        (r["query_id"], r["neighbor_id"], r["rank"], r["cos_sim"])
+        for r in spark.read.parquet(matches_path).collect()
+        if r["batch_id"] == batch_id
+    }
+
+
+@pytest.mark.parametrize("composition", list(STORE_COMPOSITIONS))
+def test_stream_pq_residual_spilled_matches_and_parity(spark, sf_dir, tmp_path, composition):
+    """The stream searches and writes exactly as the batch verbs do, on
+    every store composition (flat IVF at n_home 1 and 2, two-level IVF,
+    two-level plain PQ, two-level residual PQ, residual × spilled PQ):
+
+      - per-batch matches == `search_index` with the batch as external
+        queries over a reference store holding exactly the PRIOR batches
+        (stream==batch parity, IVF or compressed-domain),
+      - the final /vectors (and /codes on a codebook-built store) are
+        row-identical to a build+append chain with the same stored model,
       - replaying a batch leaves matches, /vectors and /codes
-        byte-identical (the codes sink joined the exactly-once
-        per-batch_id dynamic overwrite discipline in r11)."""
+        byte-identical (per-batch_id dynamic overwrite on every sink)."""
     from scripts_toolkit_spark.ext.ann_index import append_to_index, search_index
 
+    build_kw, use_pq, codebook = STORE_COMPOSITIONS[composition]
     emb = load_table(spark, sf_dir, "embeddings")
+    if codebook is not None:
+        build_kw = dict(build_kw, sub_codebook=codebook(spark, emb))
     b0 = emb.where("vec_id % 3 = 0")
     b1 = emb.where("vec_id % 3 = 1")
     b2 = emb.where("vec_id % 3 = 2")
-    index_path = str(tmp_path / "pqix")
+    index_path = str(tmp_path / "ix")
     matches_path = str(tmp_path / "matches")
-    # model trained ONCE on the first slice; both knobs land in meta
-    build_ann_index(
-        b0, index_path, n_cells=8, n_home=2, residual=True,
-        pq_n_codes=64, m=4, sub_dim=16,
-    )
+    # model trained ONCE on the first slice; every knob lands in meta
+    build_ann_index(b0, index_path, **build_kw)
     proc = make_ann_ingest_processor(
-        index_path, matches_path, k=3, n_probe=3, use_pq=True, rerank_factor=8
+        index_path, matches_path, k=3, n_probe=3, use_pq=use_pq, rerank_factor=8
     )
     proc(b1, 1)
     proc(b2, 2)
 
-    # reference: batch verbs over the SAME stored model
+    # reference: batch verbs over the same deterministic build
     ref_path = str(tmp_path / "ref")
-    cents = spark.read.parquet(index_path + "/centroids")
-    cb = spark.read.parquet(index_path + "/codebook")
-    build_ann_index(b0, ref_path, centroids=cents, sub_codebook=cb,
-                    n_home=2, residual=True)
-    exp1 = {tuple(r) for r in search_index(
-        spark, ref_path, queries=b1, k=3, n_probe=3, use_pq=True, rerank_factor=8
-    ).collect()}
+    build_ann_index(b0, ref_path, **build_kw)
+    search_kw = dict(k=3, n_probe=3, use_pq=use_pq, rerank_factor=8)
+    exp1 = {tuple(r) for r in search_index(spark, ref_path, queries=b1, **search_kw).collect()}
     append_to_index(spark, ref_path, b1)
-    exp2 = {tuple(r) for r in search_index(
-        spark, ref_path, queries=b2, k=3, n_probe=3, use_pq=True, rerank_factor=8
-    ).collect()}
+    exp2 = {tuple(r) for r in search_index(spark, ref_path, queries=b2, **search_kw).collect()}
     append_to_index(spark, ref_path, b2)
 
-    got = spark.read.parquet(matches_path).collect()
-    got1 = {(r["query_id"], r["neighbor_id"], r["rank"], r["cos_sim"])
-            for r in got if r["batch_id"] == 1}
-    got2 = {(r["query_id"], r["neighbor_id"], r["rank"], r["cos_sim"])
-            for r in got if r["batch_id"] == 2}
-    assert got1 == exp1 and got1, "batch-1 compressed matches diverge"
-    assert got2 == exp2 and got2, "batch-2 compressed matches diverge"
+    got1 = _match_rows(spark, matches_path, 1)
+    got2 = _match_rows(spark, matches_path, 2)
+    assert got1 == exp1 and got1, "batch-1 matches diverge from search_index"
+    assert got2 == exp2 and got2, "batch-2 matches diverge from search_index"
 
-    def vec_rows(p):
-        return {
-            (r["vec_id"], r["cell_id"], r["probe_rank"], tuple(r["embedding"]))
-            for r in spark.read.parquet(p + "/vectors").collect()
-        }
+    n_home = build_kw.get("n_home", 1)
+    assert _vec_rows(spark, index_path) == _vec_rows(spark, ref_path)
+    assert len(_vec_rows(spark, index_path)) == n_home * emb.count()
+    if use_pq:
+        assert _code_rows(spark, index_path) == _code_rows(spark, ref_path)
 
-    def code_rows(p):
-        return {
-            (r["vec_id"], r["cell_id"], r["probe_rank"], tuple(r["ncodes"]))
-            for r in spark.read.parquet(p + "/codes").collect()
-        }
+    def state():
+        return (
+            sorted(tuple(r) for r in spark.read.parquet(matches_path).collect()),
+            sorted(_vec_rows(spark, index_path)),
+            sorted(_code_rows(spark, index_path)) if use_pq else None,
+        )
 
-    assert vec_rows(index_path) == vec_rows(ref_path)
-    assert code_rows(index_path) == code_rows(ref_path)
-    assert len(vec_rows(index_path)) == 2 * emb.count(), "spilled copies missing"
+    pre = state()
+    proc(b2, 2)  # replay
+    assert state() == pre
 
-    # replay idempotency extends to the codes sink
-    pre = (sorted(map(tuple, got)),
-           sorted(vec_rows(index_path)), sorted(code_rows(index_path)))
-    proc(b2, 2)
-    post = (
-        sorted(tuple(r) for r in spark.read.parquet(matches_path).collect()),
-        sorted(vec_rows(index_path)), sorted(code_rows(index_path)),
+
+def test_stream_after_retrain_matches_batch_chain(spark, sf_dir, tmp_path):
+    """A `retrain_index` between micro-batches takes effect on the next
+    batch: the stream reads the stored model every batch, so
+    build(b0) → stream b1 → retrain → stream b2 leaves the same store as
+    build(b0) → append(b1) → retrain → append(b2), and b2's matches
+    equal `search_index` over the retrained store. The seeded residual ×
+    spilled store rebuilds both centroids and codebook on retrain."""
+    from scripts_toolkit_spark.ext.ann_index import (
+        append_to_index,
+        retrain_index,
+        search_index,
     )
-    assert pre == post
+
+    build_kw, _use_pq, _cb = STORE_COMPOSITIONS["residual_spilled_pq"]
+    emb = load_table(spark, sf_dir, "embeddings")
+    b0 = emb.where("vec_id % 3 = 0")
+    b1 = emb.where("vec_id % 3 = 1")
+    b2 = emb.where("vec_id % 3 = 2")
+    index_path = str(tmp_path / "ix")
+    matches_path = str(tmp_path / "matches")
+    build_ann_index(b0, index_path, **build_kw)
+    proc = make_ann_ingest_processor(
+        index_path, matches_path, k=3, n_probe=3, use_pq=True, rerank_factor=8
+    )
+    proc(b1, 1)
+    retrain_index(spark, index_path)
+    proc(b2, 2)
+
+    ref_path = str(tmp_path / "ref")
+    build_ann_index(b0, ref_path, **build_kw)
+    append_to_index(spark, ref_path, b1)
+    retrain_index(spark, ref_path)
+    exp2 = {
+        tuple(r)
+        for r in search_index(
+            spark, ref_path, queries=b2, k=3, n_probe=3, use_pq=True, rerank_factor=8
+        ).collect()
+    }
+    append_to_index(spark, ref_path, b2)
+
+    assert _vec_rows(spark, index_path) == _vec_rows(spark, ref_path)
+    assert _code_rows(spark, index_path) == _code_rows(spark, ref_path)
+    got2 = _match_rows(spark, matches_path, 2)
+    assert got2 == exp2 and got2, "post-retrain matches diverge from search_index"
 
 
 def test_lifecycle_compact_delete_between_batches(spark, sf_dir, tmp_path):
