@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scripts_toolkit_spark.materialize import materialize
+
 # ------------------------------------------------------------- S1: fetch ---
 def fetch_to_staging(url: str, staging_dir: str, filename: str | None = None) -> str:
     """Driver-side HTTP(S)/file fetch into a staging path (control plane —
@@ -158,7 +160,13 @@ def read_xport(spark: SparkSession, path_glob: str, chunksize: int = 4000) -> Da
 
     Schema note: XPORT column sets vary per file, so files must be
     homogeneous per call; the schema is probed from the first file
-    driver-side (control-plane: one quarterly file, MBs)."""
+    driver-side (control-plane: one quarterly file, MBs).
+
+    The decoded frame is returned behind a `materialize()` boundary, so
+    each file crosses the JVM→Python boundary and is decoded exactly once
+    per call. Without it every action on the result (the quarter's
+    `first()`, the profile aggregate, each type family's unpivot in the
+    EAV write) would re-run the `mapInPandas` decode."""
     files = spark.read.format("binaryFile").load(path_glob).select("path", "content")
     first = files.limit(1).collect()
     if not first:
@@ -177,7 +185,7 @@ def read_xport(spark: SparkSession, path_glob: str, chunksize: int = 4000) -> Da
                     frame[c] = frame[c].astype("float64")
                 yield frame
 
-    return files.mapInPandas(_decode, schema)
+    return files.mapInPandas(_decode, schema).transform(materialize)
 
 
 # -------------------------------------------- S5: XBRL linkbase XML arcs ---

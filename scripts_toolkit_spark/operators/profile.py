@@ -2,7 +2,7 @@
 
 Re-expresses the reference's per-column heuristics
 (converter.py:23-94: bool_detector / int_detector / type_detector) as ONE
-distributed aggregation pass over all columns, instead of the reference's
+grouped aggregation over all columns, instead of the reference's
 O(columns) separate filter+dedup passes (converter.py:271).
 
 Reference semantics preserved exactly:
@@ -14,84 +14,76 @@ Reference semantics preserved exactly:
 - int ⇔ sum(distinct non-null) % 1 == 0 (converter.py:54-73), including the
   empty-column edge (sum of nothing = 0 ⇒ int) and the documented
   false-positive (fractional values summing to a whole).
-- NaN counts as null (pandas pd.isnull) — doubles are NaN-normalized first.
+- NaN counts as null (pandas pd.isnull) — floating columns are
+  NaN-normalized first.
 
-Scale note: the single `agg` computes 2 distinct-style aggregates per
-column; Catalyst plans multi-distinct aggregation with an Expand (one
-row-multiplication per distinct group). For very wide matrices (thousands
-of MDRM columns) this is still one shuffle-light job and beats per-column
-scans by orders of magnitude; if needed, columns can be profiled in batches.
+Shape: the numeric columns are unpivoted (as double) into
+(column_name, value) rows and profiled by one
+`groupBy(column_name).agg(count_distinct, min, max, sum_distinct)`. Both
+distinct aggregates share one distinct key, `value`, so the plan is a
+plain two-phase grouped aggregate with no Expand, one row out per column.
+A 5,000-column bank matrix is still one job; its unpivot is chunked like
+the melt's (`operators.reshape.unpivot_chunked`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import NumericType, StringType, BooleanType
+from pyspark.sql.types import BooleanType, DoubleType, FloatType, NumericType, StringType
+
+from scripts_toolkit_spark.operators.reshape import unpivot_chunked
 
 
-def profile_types(
-    df: DataFrame, exclude: tuple[str, ...] = (), batch_size: int = 64
-) -> dict[str, str]:
+def profile_types(df: DataFrame, exclude: tuple[str, ...] = ()) -> dict[str, str]:
     """Return {column → 'bool'|'int'|'float'|'str'} per reference semantics.
 
-    One aggregation job per `batch_size` numeric columns. Multi-distinct
-    aggregation plans an Expand (one row replica per distinct group, 4 per
-    column) — unbatched, a 5,000-column bank matrix would multiply every
-    row 20,000×; batches cap the blowup at 4×batch_size per scan while
-    keeping the job count O(columns/batch), still orders of magnitude
-    fewer passes than the reference's per-column loops. `exclude` columns
-    (ids, dates) are skipped.
+    Non-numeric columns are typed from the schema alone; the numeric ones
+    take one grouped aggregate job over their (column_name, value) unpivot
+    (module doc). A column with no rows to group — an empty frame — has no
+    distinct values and sums to nothing, so it reads as 'int', as in the
+    reference. `exclude` columns (ids, dates) are skipped.
     """
-    numeric_cols: list[str] = []
+    values: dict[str, Column] = {}
     result: dict[str, str] = {}
     for field in df.schema.fields:
-        if field.name in exclude:
+        c = field.name
+        if c in exclude:
             continue
         if isinstance(field.dataType, StringType):
-            result[field.name] = "str"
+            result[c] = "str"
         elif isinstance(field.dataType, BooleanType):
-            result[field.name] = "bool"
+            result[c] = "bool"
         elif isinstance(field.dataType, NumericType):
-            numeric_cols.append(field.name)
+            v = F.col(c)
+            if isinstance(field.dataType, (FloatType, DoubleType)):
+                # NaN → null to mirror pd.isnull (converter.py:39, 67)
+                v = F.when(F.isnan(v), F.lit(None)).otherwise(v)
+            values[c] = v.cast("double")
         else:
             # timestamps/arrays/etc. have no reference analog; treat as str
-            result[field.name] = "str"
+            result[c] = "str"
 
-    if not numeric_cols:
+    if not values:
         return result
 
-    for start in range(0, len(numeric_cols), batch_size):
-        batch = numeric_cols[start : start + batch_size]
-        aggs = []
-        for c in batch:
-            # NaN → null to mirror pd.isnull (converter.py:39, 67)
-            v = (
-                F.when(F.isnan(F.col(c)), F.lit(None)).otherwise(F.col(c))
-                if _is_floating(df, c)
-                else F.col(c)
-            )
-            aggs += [
-                F.count_distinct(v).alias(f"{c}__nd"),
-                F.min(v).alias(f"{c}__mn"),
-                F.max(v).alias(f"{c}__mx"),
-                F.sum_distinct(v).alias(f"{c}__sd"),
-            ]
-        row = df.agg(*aggs).collect()[0]
-
-        for c in batch:
-            nd, mn, mx, sd = (row[f"{c}__nd"], row[f"{c}__mn"], row[f"{c}__mx"], row[f"{c}__sd"])
-            if nd == 2 and mn == 0 and mx == 1:
-                result[c] = "bool"
-            elif (sd or 0) % 1 == 0:
-                result[c] = "int"
-            else:
-                result[c] = "float"
+    v = F.col("value")
+    stats = {
+        r[0]: tuple(r[1:])
+        for r in unpivot_chunked(df, [], values, "column_name")
+        .groupBy("column_name")
+        .agg(F.count_distinct(v), F.min(v), F.max(v), F.sum_distinct(v))
+        .collect()
+    }
+    for c in values:
+        nd, mn, mx, sd = stats.get(c, (0, None, None, None))
+        if nd == 2 and mn == 0 and mx == 1:
+            result[c] = "bool"
+        elif (sd or 0) % 1 == 0:
+            result[c] = "int"
+        else:
+            result[c] = "float"
     return result
-
-
-def _is_floating(df: DataFrame, col: str) -> bool:
-    return dict(df.dtypes)[col] in ("float", "double")
 
 
 def column_stats(df: DataFrame, cols: list[str], sum_decimal: str = "decimal(18,2)") -> DataFrame:

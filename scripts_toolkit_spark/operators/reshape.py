@@ -29,7 +29,9 @@ no value-discovery job).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 EAV_FIELDS = (
@@ -47,6 +49,22 @@ EAV_FIELDS = (
 # projections whole-stage codegen splits/falls back and per-row cost ~4×.
 # 64 measured best of {64, 128, 200} at 600 columns (scale_probe melt).
 _UNPIVOT_CHUNK = 64
+
+
+def unpivot_chunked(
+    df: DataFrame, ids: list[Column], values: dict[str, Column], variable: str
+) -> DataFrame:
+    """Unpivot `values` (output name → expression, all of one type) into
+    (*ids, `variable`, value) rows: one `unpivot` per ≤ `_UNPIVOT_CHUNK`
+    columns, unioned. The union is row-identical to a single unpivot; each
+    chunk's scan prunes to its own columns, so input volume is unchanged."""
+    names = list(values)
+    chunks: list[DataFrame] = []
+    for lo in range(0, len(names), _UNPIVOT_CHUNK):
+        cs = names[lo : lo + _UNPIVOT_CHUNK]
+        part = df.select(*ids, *[values[c].alias(c) for c in cs])
+        chunks.append(part.unpivot(part.columns[: len(ids)], cs, variable, "value"))
+    return functools.reduce(DataFrame.unionByName, chunks)
 
 
 def normalize_wide(df: DataFrame, entity_col: str = "entity", date_col: str = "date") -> DataFrame:
@@ -102,18 +120,7 @@ def melt_to_eav(
     parts: list[DataFrame] = []
 
     def _unpivot(cols: list[str], to_type: str) -> DataFrame:
-        chunks: list[DataFrame] = []
-        for lo in range(0, len(cols), _UNPIVOT_CHUNK):
-            cs = cols[lo : lo + _UNPIVOT_CHUNK]
-            chunks.append(
-                df.select(rssd, *[F.col(c).cast(to_type) for c in cs]).unpivot(
-                    ["rssd"], cs, "mdrm", "value"
-                )
-            )
-        out = chunks[0]
-        for c in chunks[1:]:
-            out = out.unionByName(c)
-        return out
+        return unpivot_chunked(df, [rssd], {c: F.col(c).cast(to_type) for c in cols}, "mdrm")
 
     if bool_cols:
         # truthy over the string image covers 1 / '1' / 'true' variants

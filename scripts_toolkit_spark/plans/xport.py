@@ -3,15 +3,18 @@
 Reference flow (converter.py:215-280): decode XPORT → extract quarter →
 normalize → per-column type profile → iterrows melt → JSON. Here:
 
-    decode (io.sources.read_xport, mapInPandas)      [Phase 6]
+    decode (io.sources.read_xport: mapInPandas, then materialize)
       → extract_quarter (first-row constant)
       → normalize_wide
-      → profile_types (ONE agg job — the data-dependent "plan" phase)
+      → profile_types (one grouped aggregate — the data-dependent "plan" phase)
       → melt_to_eav (vectorized unpivot per type family)
       → write_eav (parquet partitioned by quarter)
 
-The two-phase shape survives by design: the profile is an action whose
-collected result parameterizes the melt plan (SURVEY §4.2 custom #3).
+Decoding happens once, at `read_xport`: it returns the decoded rows behind
+a materialization boundary, so the quarter lookup, the profile and every
+unpivot of the write scan those rows instead of re-running the Python
+decode. The two-phase shape survives by design: the profile is an action
+whose collected result parameterizes the melt plan (SURVEY §4.2 custom #3).
 """
 
 from __future__ import annotations

@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 from pyspark.sql import functions as F
+
+from scripts_toolkit_spark.operators import reshape as R
 
 from scripts_toolkit_spark.operators.profile import profile_types
 from scripts_toolkit_spark.operators.reshape import melt_to_eav, pivot_from_eav
@@ -80,14 +83,72 @@ def test_pivot_round_trip(spark):
     assert by_id[1] == 1.5 and by_id[2] == 2.25
 
 
-def test_profile_types_batching_equivalence(spark):
-    """Batched profiling (the wide-matrix scale path) must return exactly
-    the single-pass result regardless of batch size."""
-    from pyspark.sql import functions as F
-    from scripts_toolkit_spark.operators.profile import profile_types
+def _reference_types(pdf: pd.DataFrame) -> dict[str, str]:
+    """In-test transcription of the reference detectors (converter.py:23-94):
+    dtype object → str; a distinct non-null set equal to {0, 1} → bool; a
+    whole sum of the distinct non-null values → int; anything else float."""
+    out = {}
+    for c in pdf.columns:
+        s = pdf[c]
+        if s.dtype == object:
+            out[c] = "str"
+            continue
+        distinct = set(s.dropna().unique())
+        if distinct == {0, 1}:
+            out[c] = "bool"
+        elif sum(distinct) % 1 == 0:
+            out[c] = "int"
+        else:
+            out[c] = "float"
+    return out
+
+
+_NAN = float("nan")
+# name → (Spark type, values); pandas gets the same values with the dtype
+# the reference's XPORT decode would hold them in
+_EDGE_COLUMNS = {
+    "all_null": ("double", [None] * 6),
+    "with_nan": ("double", [1.5, _NAN, 2.25, None, 1.5, _NAN]),
+    "nan_ints": ("double", [_NAN, 3.0, 4.0, 3.0, None, _NAN]),
+    "zeros": ("double", [0.0] * 6),
+    "bool_nulls": ("double", [0.0, 1.0, None, 1.0, _NAN, 0.0]),
+    "three_seven": ("double", [3.0, 7.0, 3.0, None, 7.0, 3.0]),
+    "frac_whole": ("double", [0.25, 0.75, 0.25, None, 0.75, 0.25]),  # sums to 1 → int
+    "f32_nan": ("float", [0.5, _NAN, 1.25, 0.5, None, 2.0]),
+    "longs": ("bigint", [5, 9, 5, 12, 9, 5]),
+    "long_flags": ("bigint", [0, 1, 1, 0, 1, 0]),
+    "long_nulls": ("bigint", [4, None, 8, 4, None, 1]),
+    "s": ("string", ["a", None, "c", "a", "b", None]),
+}
+_PANDAS_DTYPE = {"double": "float64", "float": "float32", "string": object}
+
+
+def test_profile_types_matches_reference_heuristics(spark):
+    """`profile_types` equals the reference detectors on every edge case:
+    all-null, NaN, all zeros, {0,1} with nulls, {3,7}, fractional values
+    summing to a whole, long columns, an empty frame, and 70 columns so
+    the grouped pass's unpivot crosses a chunk boundary."""
+    names = list(_EDGE_COLUMNS)
+    n = len(next(iter(_EDGE_COLUMNS.values()))[1])
+    df = spark.createDataFrame(
+        [tuple(_EDGE_COLUMNS[c][1][i] for c in names) for i in range(n)],
+        ", ".join(f"{c} {t}" for c, (t, _v) in _EDGE_COLUMNS.items()),
+    )
+    pdf = pd.DataFrame(
+        {
+            c: pd.Series(v, dtype=_PANDAS_DTYPE.get(t, "float64" if None in v else "int64"))
+            for c, (t, v) in _EDGE_COLUMNS.items()
+        }
+    )
+    got = profile_types(df)
+    assert got == _reference_types(pdf)
+    assert got["frac_whole"] == "int" and got["bool_nulls"] == "bool"
+    assert got["all_null"] == "int" and got["zeros"] == "int"
+    assert got["with_nan"] == "float" and got["long_flags"] == "bool"
+    assert profile_types(df.where("false")) == _reference_types(pdf.iloc[:0])
 
     # 101 rows: an odd count of +0.5 offsets keeps sum_distinct fractional,
-    # dodging the documented int-detector false-positive (profile.py:21)
+    # dodging the documented int-detector false-positive
     df = spark.range(101).select(
         *[
             (F.col("id") * (i + 1) + (0.5 if i % 4 == 2 else 0)).alias(f"c{i}")
@@ -96,19 +157,18 @@ def test_profile_types_batching_equivalence(spark):
         (F.col("id") % 2).cast("double").alias("flag"),
     )
     full = profile_types(df)
-    for bs in (1, 3, 7, 64):
-        assert profile_types(df, batch_size=bs) == full
+    assert full == _reference_types(df.toPandas())
     assert full["flag"] == "bool" and full["c2"] == "float" and full["c0"] == "int"
 
-    # and with MORE real columns than the default batch size, so the
-    # default path actually crosses a batch boundary (70 cols → 2 batches)
+    # more numeric columns (70, long and double) than one unpivot chunk
     wide = spark.range(31).select(
         *[
             (F.col("id") * (i + 1) + (0.5 if i % 3 == 1 else 0)).alias(f"w{i}")
             for i in range(70)
         ]
     )
-    assert profile_types(wide) == profile_types(wide, batch_size=200)
+    assert len(wide.columns) > R._UNPIVOT_CHUNK
+    assert profile_types(wide) == _reference_types(wide.toPandas())
 
 
 def test_melt_chunked_unpivot_equivalence(spark, monkeypatch):
@@ -118,10 +178,6 @@ def test_melt_chunked_unpivot_equivalence(spark, monkeypatch):
     chunked form must be ROW-IDENTICAL to the single-unpivot form on a
     mixed-type 150-column frame, at several chunk widths including one
     that leaves a ragged tail."""
-    from pyspark.sql import functions as F
-
-    from scripts_toolkit_spark.operators import reshape as R
-
     n_each = 50  # 150 value columns: 50 float, 50 int, 50 str
     df = spark.range(40).select(
         F.col("id").alias("rssd"),

@@ -108,6 +108,18 @@ def test_read_xport_spark_e2e(spark, tmp_path):
     assert rows[2]["VALUE"] is None or math.isnan(rows[2]["VALUE"])
 
 
+def test_read_xport_decodes_once(spark, tmp_path):
+    """read_xport returns the decoded rows behind a materialization
+    boundary: no action on the result re-runs the Python decode."""
+    from scripts_toolkit_spark.io.sources import read_xport
+
+    (tmp_path / "q1.xpt").write_bytes(write_xport(_fixture_frame(), member_name="Q1"))
+    df = read_xport(spark, str(tmp_path / "*.xpt"))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInPandas" not in plan, plan
+    assert df.count() == 4
+
+
 def test_xport_to_eav_pipeline_e2e(spark, tmp_path):
     """The reference's full converter flow (converter.py:215-280) on REAL
     transport bytes: XPT → distributed decode → quarter extract → type

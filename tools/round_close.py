@@ -93,17 +93,14 @@ def full_sweep(sf_dirs: tuple[str, ...]) -> int:
 
 def bench_deltas() -> None:
     """Print per-query WARM deltas between the two latest recorded
-    BENCH_r*.json files (r12 — round-11 verdict Next #4 tail: the
-    round-over-round comparison should be one command, and a delta
-    smaller than the run's own warm spread is noise, not signal)."""
+    BENCH_r*.json files not marked load_ok=false (r12 — round-11 verdict
+    Next #4 tail: the round-over-round comparison should be one command,
+    and a delta smaller than the run's own warm spread is noise, not
+    signal)."""
     files = sorted(
         (f for f in os.listdir(REPO) if re.fullmatch(r"BENCH_r\d+\.json", f)),
         key=lambda f: int(re.search(r"\d+", f).group()),
     )
-    if len(files) < 2:
-        print("(fewer than two BENCH_r*.json files — no deltas to print)")
-        return
-    prev_f, cur_f = files[-2], files[-1]
 
     def _queries(fname: str) -> dict:
         with open(os.path.join(REPO, fname)) as f:
@@ -145,17 +142,20 @@ def bench_deltas() -> None:
                 return bool(d["load_ok"])
         return None
 
-    # refuse to stamp deltas from a run the bench itself marked
-    # not-comparison-grade (r14 — round-13 verdict Next #4: BENCH_r13's
-    # loadavg-6.67 run inflated four rows 1.5-2× and read as regressions)
-    bad = [f for f in (prev_f, cur_f) if _load_ok(f) is False]
+    # never stamp deltas from a run the bench itself marked not
+    # comparison-grade (a loaded host inflates rows 1.5-2× into false
+    # regressions): skip those artifacts and compare the newest two left
+    bad = [f for f in files if _load_ok(f) is False]
     if bad:
         print(
-            f"REFUSING bench deltas: {', '.join(bad)} recorded "
-            "load_ok=false (host loaded at bench start) — re-run "
-            "`python bench.py` exclusively on a quiet host first"
+            f"skipping {', '.join(bad)}: recorded load_ok=false "
+            "(host loaded at bench start)"
         )
+    files = [f for f in files if f not in bad]
+    if len(files) < 2:
+        print("(fewer than two comparable BENCH_r*.json files — no deltas to print)")
         return
+    prev_f, cur_f = files[-2], files[-1]
 
     prev, cur = _queries(prev_f), _queries(cur_f)
     # numeric-only (advisor r12): a nested split dict or other non-numeric
