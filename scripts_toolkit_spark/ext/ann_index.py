@@ -27,9 +27,15 @@ family:
     {path}/codes       (vec_id, ncodes array<int>, cell_id, probe_rank)
                        — optional PQ-compressed corpus, present exactly
                        when /codebook is; kept row-parity with /vectors by
-                       `append_to_index` (late batches are encoded with the
-                       STORED codebook). PLAIN codes are cell-independent
-                       (spilled copies carry identical ncodes); RESIDUAL
+                       the store's two batch writers, which write a
+                       batch's /vectors partition and then its /codes
+                       partition: `_write_stored` (the only Spark writer:
+                       build, retrain, the stream, two-level and over-cap
+                       appends) and `write_partition` (the only driver
+                       writer: appends to a flat driver-held model); late
+                       batches are encoded with the STORED codebook.
+                       PLAIN codes are cell-independent (spilled copies
+                       carry identical ncodes); RESIDUAL
                        codes (meta residual = true, r11 — the round-10
                        verdict Next #1 port) are PER STORED COPY: each copy
                        encodes v − c(the cell it is stored in), the
@@ -61,8 +67,9 @@ Design rules
   frame is the only SF-linear table and it is written/read as plain
   parquet — partition pruning and pushdown apply as for any table.
 - Control-plane IO goes through one seam (`read_rows` / `write_rows` /
-  `batch_ids` / `row_count`), which picks driver-side pyarrow for a local
-  store (zero Spark jobs) and Spark IO for an hdfs:// or s3a:// one.
+  `batch_ids` / `row_count` / `read_frame` / `write_partition`), which
+  picks driver-side pyarrow for a local store (zero Spark jobs) and Spark
+  IO for an hdfs:// or s3a:// one.
 - Lifecycle: `index_health` (staleness report: occupancy skew +
   appended-since-train fraction, one scan), `compact_index` (merge append
   partitions, model untouched), `delete_from_index` (anti-join /vectors +
@@ -82,11 +89,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 from pyspark.sql.window import Window
 
 from scripts_toolkit_spark.ext.similarity import (
     _IVF_LITERAL_MAX_DOUBLES,
+    KERNEL_BLOCK_ROWS,
     _dot,
     _dot_rows_kernel,
     _pq_rank,
@@ -97,8 +105,11 @@ from scripts_toolkit_spark.ext.similarity import (
     ivf_assign,
     ivf_assign_two_level,
     local_rows_df,
+    nearest_cells,
+    normalize_rows,
     normalize_vectors,
     pq_code_arrays,
+    pq_l2sq_codes,
     seeded_residual_codebook_rows,
     threshold_centroids,
 )
@@ -176,6 +187,10 @@ class _ArrowStoreIO:
         # √N-scale, never read whole for a count
         return sum(pq.read_metadata(f).num_rows for f in self._files(name))
 
+    def spark_schema(self, name: str):
+        # the footer of the first file, read driver-side
+        return from_arrow_schema(pq.read_schema(self._files(name)[0]))
+
     def write_rows(self, name: str, rows: list[tuple]) -> None:
         d = os.path.join(self.root, name)
         shutil.rmtree(d, ignore_errors=True)
@@ -185,6 +200,17 @@ class _ArrowStoreIO:
             [dict(zip(schema.names, r)) for r in rows], schema=schema
         )
         pq.write_table(table, os.path.join(d, "part-00000.parquet"))
+
+    def write_partition(self, sub: str, batch_id: int, table: pa.Table) -> None:
+        # written under a hidden name (no reader lists dot-files), then
+        # renamed over the partition: its old files are replaced whole
+        final = os.path.join(self.root, sub, f"batch_id={batch_id}")
+        tmp = os.path.join(self.root, sub, f".batch_id={batch_id}.tmp")
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+        shutil.rmtree(final, ignore_errors=True)
+        os.rename(tmp, final)
 
 
 class _SparkStoreIO:
@@ -214,10 +240,20 @@ class _SparkStoreIO:
     def row_count(self, name: str) -> int:
         return self.spark.read.parquet(f"{self.root}/{name}").count()
 
+    def spark_schema(self, name: str):
+        return self.spark.read.parquet(f"{self.root}/{name}").schema
+
     def write_rows(self, name: str, rows: list[tuple]) -> None:
         local_rows_df(self.spark, rows, _spark_schema(name)).write.mode(
             "overwrite"
         ).parquet(f"{self.root}/{name}")
+
+    def write_partition(self, sub: str, batch_id: int, table: pa.Table) -> None:
+        # an Arrow-built frame is one slice per Arrow batch (no Python
+        # parents); overwriting the partition directory replaces its files
+        self.spark.createDataFrame(table).write.mode("overwrite").parquet(
+            f"{self.root}/{sub}/batch_id={batch_id}"
+        )
 
 
 def _store_io(spark: SparkSession, path: str):
@@ -235,6 +271,23 @@ def write_rows(spark: SparkSession, path: str, name: str, rows: list[tuple]) -> 
     """Overwrite the control file {path}/{name} with `rows`, tuples in
     `_CONTROL_SCHEMAS[name]` field order."""
     _store_io(spark, path).write_rows(name, rows)
+
+
+def read_frame(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """{path}/{name} as a Spark frame. A local store takes its schema off
+    the parquet footer driver-side, so the read schedules no
+    schema-inference job; a remote one infers it (one job)."""
+    schema = _store_io(spark, path).spark_schema(name)
+    return spark.read.schema(schema).parquet(f"{path}/{name}")
+
+
+def write_partition(
+    spark: SparkSession, path: str, sub: str, batch_id: int, table: pa.Table
+) -> None:
+    """Replace the {path}/{sub} partition `batch_id` with the rows of an
+    Arrow `table` (no batch_id column) — the driver-side writer of a
+    batch, with the dynamic-overwrite semantics of `_write_stored`."""
+    _store_io(spark, path).write_partition(sub, batch_id, table)
 
 
 def row_count(spark: SparkSession, path: str, name: str) -> int:
@@ -425,8 +478,9 @@ class _Model(NamedTuple):
 
 def read_model(spark: SparkSession, path: str, use_pq: bool = False) -> _Model:
     """The model stored at `path`, read through the control-plane seam:
-    on a local store the only Spark job is the /centroids frame's schema
-    read. Every verb call and every stream batch reads it afresh, so each
+    on a local store it schedules no Spark job (the /centroids frame takes
+    its schema off the footer). Every verb call and every stream batch
+    reads it afresh, so each
     works against the model the last `build_ann_index` / `retrain_index`
     wrote. `use_pq=True` callers search the compressed codes and get a
     ValueError on a store without a PQ model."""
@@ -438,7 +492,7 @@ def read_model(spark: SparkSession, path: str, use_pq: bool = False) -> _Model:
         )
     return _Model(
         meta,
-        spark.read.parquet(path + "/centroids"),
+        read_frame(spark, path, "centroids"),
         _centroid_rows_from_store(spark, path, meta),
         cb_rows,
     )
@@ -468,7 +522,7 @@ def _write_model(
     n_cells = len(cent_rows) if cent_rows is not None else row_count(spark, path, "centroids")
     meta = dict(meta, n_cells=n_cells, dim=int(dim))
     _write_meta(spark, path, meta)
-    return _Model(meta, spark.read.parquet(path + "/centroids"), cent_rows, cb_rows)
+    return _Model(meta, read_frame(spark, path, "centroids"), cent_rows, cb_rows)
 
 
 def _assign_stored(
@@ -796,6 +850,104 @@ def build_ann_index(
     return spark.read.parquet(path + "/vectors")
 
 
+def _refuse(batch: pa.Table, id_col: str, vec_col: str, i: int, why: str):
+    vid = batch.column(id_col)[i].as_py()
+    return ValueError(f"append_to_index: {vec_col} of {id_col}={vid} {why}; nothing was written")
+
+
+def _batch_matrix(batch: pa.Table, id_col: str, vec_col: str, dim: int):
+    """The float64 (n, dim) matrix of a collected batch's vectors (a null
+    element reads NaN); raises ValueError naming the first vec_id whose
+    embedding is null or not `dim` long."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    vec = batch.column(vec_col).combine_chunks()
+    bad = pc.fill_null(pc.not_equal(pc.list_value_length(vec), dim), True)
+    if pc.any(bad).as_py():
+        raise _refuse(batch, id_col, vec_col, pc.index(bad, True).as_py(),
+                      f"is null or not {dim} long")
+    return vec.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, dim)
+
+
+def _append_on_driver(
+    spark: SparkSession,
+    path: str,
+    new_vectors: DataFrame,
+    model: _Model,
+    batch_id: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Append a batch to a store whose flat model the driver holds: ONE
+    Arrow collect, then normalize, assign `n_home` deep and PQ-encode in
+    numpy with the Arrow kernels' own row-block functions (so the rows
+    are bit-identical to `_assign_stored` + `_write_stored`), and write
+    the /vectors then the /codes partition through the seam — every
+    check and all the math run before the first write. An empty batch
+    writes nothing, as the Spark writer does. Returns the corpus frame."""
+    import numpy as np
+
+    batch = new_vectors.select(id_col, vec_col).toArrow()
+    cent_np = _cent_np_pos_from_rows(model.cent_rows)[0]
+    n, dim = batch.num_rows, cent_np.shape[1]
+    X = _batch_matrix(batch, id_col, vec_col, dim)
+    if n == 0:
+        return spark.read.parquet(path + "/vectors")
+    residual = _meta_n_home_residual(model.meta)[1]
+    k = min(model.n_home, len(cent_np))
+    pos = np.empty((n, k), dtype=np.int64)
+    codes = None
+    if model.cb_rows is not None:
+        cb_np, m, n_codes, sub_dim = _codebook_from_rows(model.cb_rows)
+        CB = cb_np.reshape(m, n_codes, sub_dim)
+        codes = np.empty((n, k, m), dtype=np.int32)
+    for lo in range(0, n, KERNEL_BLOCK_ROWS):
+        blk = slice(lo, lo + KERNEL_BLOCK_ROWS)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            X[blk] = normalize_rows(X[blk])
+        bad = ~np.isfinite(X[blk]).all(axis=1)
+        if bad.any():
+            # zero norm divides to NaN, a NaN/inf element stays non-finite
+            raise _refuse(batch, id_col, vec_col, lo + int(np.argmax(bad)),
+                          "has zero or non-finite norm")
+        pos[blk] = nearest_cells(X[blk], cent_np, k)
+        if codes is None:
+            continue
+        if residual:
+            # per stored copy: v − c(the cell the copy is stored in)
+            for r in range(k):
+                codes[blk, r] = pq_l2sq_codes(X[blk] - cent_np[pos[blk, r]], CB)[1]
+        else:
+            # plain codes are cell-independent: home rows, fanned out
+            codes[blk] = pq_l2sq_codes(X[blk], CB)[1][:, None, :]
+
+    def _lists(values, width):
+        offsets = np.arange(0, len(values) + 1, width, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, values)
+
+    rows = np.repeat(np.arange(n), k)
+    cell_ids = np.asarray([c for c, _v in model.cent_rows])[pos.reshape(-1)]
+    copy_cols = {
+        "cell_id": pa.array(
+            cell_ids, type=to_arrow_type(model.cents.schema["cell_id"].dataType)
+        ),
+        "probe_rank": pa.array(np.tile(np.arange(1, k + 1, dtype=np.int32), n)),
+    }
+    ids = batch.column(id_col).take(rows)
+    vectors = pa.table(
+        {id_col: ids, vec_col: _lists(X[rows].reshape(-1), dim), **copy_cols}
+    )
+    write_partition(spark, path, "vectors", batch_id, vectors)
+    if codes is not None:
+        coded = pa.table(
+            {id_col: ids, "ncodes": _lists(codes.reshape(-1), m), **copy_cols}
+        )
+        write_partition(spark, path, "codes", batch_id, coded)
+    # read with the schema just written: no inference job
+    return spark.read.schema(from_arrow_schema(vectors.schema)).parquet(path + "/vectors")
+
+
 def append_to_index(
     spark: SparkSession,
     path: str,
@@ -813,18 +965,29 @@ def append_to_index(
     (tests/test_ext.py::test_ann_index_pq_append_parity). A spill-built
     index (meta n_home > 1) spills the late batch the same way — the
     appended copies are row-identical to a one-shot spilled build.
+
+    On a store whose flat model the driver holds (`read_model`'s
+    `cent_rows`), the batch is COLLECTED to the driver (one Arrow job)
+    and assigned and encoded there (`_append_on_driver`); a null,
+    wrong-length, zero-norm or non-finite embedding raises ValueError
+    before anything is written. Append is for late batches: corpus-scale
+    ingest belongs to `build_ann_index` or `retrain_index`. Two-level and
+    over-cap stores never collect their centroids, so they assign and
+    encode distributed (`_assign_stored` + `_write_stored`).
     Returns the updated corpus frame."""
     model = read_model(spark, path)
+    next_batch = max(batch_ids(spark, path), default=-1) + 1
+    if model.cent_rows is not None:
+        return _append_on_driver(spark, path, new_vectors, model, next_batch, id_col, vec_col)
     # repartition the late batch BEFORE the normalize+assign projection,
     # as the build does: a single-file batch arrives as 1-2 scan
     # partitions and the Arrow assign kernel otherwise rides that narrow
-    # stage (measured 0.30 s single-task at sf0.1); the shuffle moves the
-    # batch's bytes once and the kernel runs cluster-wide
+    # stage; the shuffle moves the batch's bytes once and the kernel runs
+    # cluster-wide
     par = spark.sparkContext.defaultParallelism
     assigned = _assign_stored(
         new_vectors.repartition(par), model, model.n_home, id_col, vec_col, normalize=True
     )
-    next_batch = max(batch_ids(spark, path), default=-1) + 1
     _write_stored(spark, path, assigned, next_batch, model, id_col, vec_col)
     return spark.read.parquet(path + "/vectors")
 

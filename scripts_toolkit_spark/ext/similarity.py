@@ -214,6 +214,65 @@ def pick_is_local(mode: str, n_cells: int, dim: int) -> bool:
     return 8 * n_cells * dim <= _PICK_COLLECT_MAX_DOUBLES
 
 
+# The numpy row-block kernels below are the ONE copy of the store's
+# normalize / assign / PQ-encode arithmetic: the Arrow `mapInPandas`
+# kernels (`ivf_assign`, `attach_pq_lut`) and the driver-side append
+# (`ann_index.append_to_index`) all call them, so a vector gets the same
+# bits whichever side computes it. Each replays its Catalyst twin's fold
+# order (the sequential left folds of `_dot` / `_l2sq`). The PQ kernel and
+# the driver append feed blocks of at most KERNEL_BLOCK_ROWS rows, so the
+# |block| × m·n_codes·sub_dim temporaries stay bounded.
+KERNEL_BLOCK_ROWS = 1024
+
+
+def normalize_rows(X):
+    """Unit-L2 rows of the float64 matrix `X`, in `normalize_vectors`'
+    fold order: acc = x0·x0, then i-ascending adds, IEEE sqrt, per-element
+    divide — bit-identical to the Catalyst expression. A zero row divides
+    to NaN here (Catalyst under ANSI raises instead): callers refuse
+    non-finite results."""
+    import numpy as np
+
+    acc = X[:, 0] * X[:, 0]
+    for i in range(1, X.shape[1]):
+        acc = acc + X[:, i] * X[:, i]
+    return X / np.sqrt(acc)[:, None]
+
+
+def nearest_cells(X, cents_np, k: int):
+    """Column positions of each row's `k` nearest centroids, best first:
+    the |block| × cells affinity accumulated i-ascending like `_dot`'s
+    fold (acc = p0 ≡ 0.0 + p0; acc = acc + p_i), then a stable argsort
+    over −aff — with cell_id-ascending columns, ties break to the lower
+    cell exactly like the (aff desc, cell_id asc) comparator, and −0.0 ==
+    0.0 under IEEE compare as in the comparator."""
+    import numpy as np
+
+    acc = X[:, 0][:, None] * cents_np[None, :, 0]
+    for i in range(1, cents_np.shape[1]):
+        acc = acc + X[:, i][:, None] * cents_np[None, :, i]
+    return np.argsort(-acc, axis=1, kind="stable")[:, :k]
+
+
+def pq_l2sq_codes(V, CB):
+    """(d2, codes) of a block of (residual or plain) vectors `V` (n, m·sub_dim)
+    against the codebook `CB` (m, n_codes, sub_dim): d2[j, s, code] =
+    L2²(subvector_s, codeword) accumulated i-ascending like `_l2sq`'s fold,
+    and codes[j, s] its first-occurrence argmin (int32) — over
+    code-ascending columns that is the (d2 asc, code asc) comparator of
+    `lut_codes_expr` and `pq_code_arrays`."""
+    import numpy as np
+
+    m, _n_codes, sub_dim = CB.shape
+    V = V.reshape(len(V), m, sub_dim)
+    diff = V[:, :, None, :] - CB[None, :, :, :]
+    sq = diff * diff
+    acc = sq[..., 0]
+    for i in range(1, sub_dim):
+        acc = acc + sq[..., i]
+    return acc, np.argmin(acc, axis=2).astype(np.int32)
+
+
 def ivf_assign(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -286,14 +345,8 @@ def ivf_assign(
         # former expression form scored every cell with an INTERPRETED
         # higher-order fold (~cells·dim lambda steps per row — measured
         # ~3.5 s for 44 cells × 2 k vectors at sf0.1); numpy runs the same
-        # arithmetic vectorized in ~ms. BIT-IDENTICAL by construction:
-        # per-element products are the same float64 IEEE multiplies, the
-        # accumulation loops i-ascending exactly like `_dot`'s sequential
-        # fold (acc = p0 ≡ 0.0 + p0; acc = acc + p_i), and the stable
-        # argsort over (−aff) reproduces the (aff desc, cell_id asc)
-        # comparator — columns are cell_id-ascending, so stability breaks
-        # ties low, and −0.0 == 0.0 under IEEE compare just as in the
-        # comparator.
+        # arithmetic vectorized in ~ms, BIT-IDENTICAL by construction
+        # (`nearest_cells`; columns are cell_id-ascending).
         import numpy as np
 
         from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
@@ -326,10 +379,7 @@ def ivf_assign(
                 if n == 0:
                     continue
                 X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                acc = X[:, 0][:, None] * cents_np[None, :, 0]
-                for i in range(1, cents_np.shape[1]):
-                    acc = acc + X[:, i][:, None] * cents_np[None, :, i]
-                order = np.argsort(-acc, axis=1, kind="stable")[:, :k_eff]
+                order = nearest_cells(X, cents_np, k_eff)
                 cols = {
                     id_col: pdf[id_col].to_numpy().repeat(k_eff),
                     vec_col: pdf[vec_col].to_numpy().repeat(k_eff),
@@ -896,7 +946,8 @@ def normalize_vectors(
     PQ: on unit vectors, L2² = 2 − 2·cos, so L2 ranking is monotone in
     cosine and the quantizer optimizes the metric the search uses.
     Deterministic: sequential-fold norm + per-element IEEE double divide
-    (replayed in DuckDB by the same list_transform / list_reduce)."""
+    (replayed in DuckDB by the same list_transform / list_reduce, and in
+    numpy by `normalize_rows`)."""
     n = F.sqrt(_dot(F.col(vec_col), F.col(vec_col)))
     return vectors.select(
         F.col(id_col),
@@ -1146,8 +1197,8 @@ def attach_pq_lut(
                 idx = np.nonzero((pdf["probe_rank"].to_numpy() <= _rank_lim))[0]
             else:
                 idx = np.nonzero(pdf["is_home"].to_numpy())[0]
-            for lo in range(0, len(idx), 1024):
-                chunk = idx[lo : lo + 1024]
+            for lo in range(0, len(idx), KERNEL_BLOCK_ROWS):
+                chunk = idx[lo : lo + KERNEL_BLOCK_ROWS]
                 V = np.asarray(
                     [np.asarray(pdf[vec_col].iloc[i], dtype=np.float64) for i in chunk]
                 )
@@ -1157,17 +1208,8 @@ def attach_pq_lut(
                     )
                 elif _residual:
                     V = V - cent_np[cellpos[chunk]]
-                V = V.reshape(len(chunk), _m, _sd)
-                diff = V[:, :, None, :] - CB[None, :, :, :]
-                sq = diff * diff
-                acc = sq[..., 0]
-                for i in range(1, _sd):
-                    acc = acc + sq[..., i]
-                flat = acc.reshape(len(chunk), _m * _nc)
-                if with_codes:
-                    # first-occurrence argmin over code-ascending columns ==
-                    # the (d2 asc, code asc) comparator of lut_codes_expr
-                    cmin = np.argmin(acc, axis=2).astype(np.int32)
+                d2, cmin = pq_l2sq_codes(V, CB)
+                flat = d2.reshape(len(chunk), _m * _nc)
                 for row_i, j_loc in enumerate(chunk):
                     luts[j_loc] = flat[row_i]
                     if with_codes:
@@ -1218,10 +1260,7 @@ def seeded_residual_codebook_rows(
     import numpy as np
 
     seeds = np.asarray([v for _c, v in seed_rows], dtype=np.float64)
-    acc = seeds[:, 0][:, None] * cent_np[None, :, 0]
-    for i in range(1, cent_np.shape[1]):
-        acc = acc + seeds[:, i][:, None] * cent_np[None, :, i]
-    homes = np.argsort(-acc, axis=1, kind="stable")[:, 0]
+    homes = nearest_cells(seeds, cent_np, 1)[:, 0]
     resid_seeds = seeds - cent_np[homes]
     return [
         (s, c, [float(x) for x in resid_seeds[c, s * sub_dim : (s + 1) * sub_dim]])

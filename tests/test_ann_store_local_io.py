@@ -12,6 +12,7 @@ top.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from scripts_toolkit_spark.ext import ann_index as ANN
 
@@ -157,3 +158,149 @@ def test_lifecycle_through_spark_io_matches_pyarrow(spark, sf_dir, tmp_path, mon
     remote = lifecycle("file://" + str(tmp_path / "remote"))
     assert local[0] and local[1]
     assert remote == local
+
+
+def _partition_rows(path, sub, batch_id):
+    import pyarrow.parquet as pq
+
+    t = pq.ParquetDataset(f"{path}/{sub}/batch_id={batch_id}").read()
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r.values())
+        for r in t.to_pylist()
+    )
+
+
+@pytest.mark.parametrize("store", ["ivf", "plain_pq_spilled", "residual_spilled"])
+def test_driver_append_matches_distributed_writer(spark, sf_dir, tmp_path, store):
+    """A flat-store append (driver collect + the numpy row-block kernels +
+    seam writes) leaves /vectors and /codes partitions row-identical to
+    the distributed writer (`_assign_stored` + `_write_stored`) fed the
+    same batch and model."""
+    import shutil
+
+    from scripts_toolkit_spark.ext.similarity import (
+        deterministic_centroids,
+        normalize_vectors,
+        pq_subspace_codebook,
+    )
+    from scripts_toolkit_spark.io.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base, late = emb.where("vec_id % 5 <> 0"), emb.where("vec_id % 5 = 0")
+    if store == "ivf":
+        kw = dict(n_cells=8)
+    elif store == "plain_pq_spilled":
+        # a caller-provided model: 8 centroids and a slice codebook
+        big = deterministic_centroids(normalize_vectors(base).localCheckpoint(), 64)
+        cb = pq_subspace_codebook(
+            big.select(F.col("cell_id").alias("code"), "centroid"), m=4, sub_dim=16
+        )
+        kw = dict(centroids=big.where("cell_id < 8"), sub_codebook=cb, n_home=2)
+    else:
+        kw = dict(n_cells=8, n_home=2, residual=True, pq_n_codes=64)
+    driver, dist = str(tmp_path / "driver"), str(tmp_path / "dist")
+    ANN.build_ann_index(base, driver, **kw)
+    shutil.copytree(driver, dist)
+
+    model = ANN.read_model(spark, driver)
+    assert model.cent_rows is not None  # the driver branch runs
+    ANN.append_to_index(spark, driver, late)
+    dist_model = ANN.read_model(spark, dist)
+    ANN._write_stored(
+        spark, dist, ANN._assign_stored(late, dist_model, model.n_home, normalize=True),
+        0, dist_model,
+    )
+    subs = ["vectors"] + (["codes"] if model.cb_rows is not None else [])
+    for sub in subs:
+        got = _partition_rows(driver, sub, 0)
+        assert got == _partition_rows(dist, sub, 0), sub
+        assert len(got) == model.n_home * late.count(), sub
+    # the appended store reads back whole: schemas of every partition agree
+    frame = ANN.append_to_index(spark, driver, late.limit(7))
+    assert frame.count() == model.n_home * (emb.count() + 7)
+    assert ANN.batch_ids(spark, driver) == [-1, 0, 1]
+
+
+def test_flat_append_is_one_job(spark, sf_dir, tmp_path):
+    """Appending to a spilled residual store whose flat model the driver
+    holds schedules ONE Spark job: the batch's Arrow collect (model reads
+    and partition writes go through the local seam)."""
+    from scripts_toolkit_spark.io.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.where("vec_id % 5 <> 0")
+    late = spark.read.parquet(sf_dir + "/embeddings.parquet").where("vec_id % 5 = 0")
+    late.schema  # resolve the batch's own schema outside the counted call
+    store = str(tmp_path / "store")
+    ANN.build_ann_index(base, store, n_home=2, residual=True, pq_n_codes=64)
+    sc = spark.sparkContext
+    sc.setJobGroup("flat-append", "flat append job count")
+    try:
+        ANN.append_to_index(spark, store, late)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("flat-append")) == 1
+
+
+@pytest.mark.parametrize(
+    "bad, why",
+    [
+        ([0.0] * 64, "has zero or non-finite norm"),
+        (None, "is null or not 64 long"),
+        ([1.0] * 63, "is null or not 64 long"),
+        ([float("nan")] + [1.0] * 63, "has zero or non-finite norm"),
+    ],
+)
+def test_append_refuses_bad_vectors_before_any_write(spark, sf_dir, tmp_path, bad, why):
+    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+
+    from scripts_toolkit_spark.io.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings").where("vec_id % 5 <> 0")
+    store = str(tmp_path / "store")
+    ANN.build_ann_index(emb, store, n_home=2, residual=True, pq_n_codes=64)
+    ANN.append_to_index(spark, store, emb.limit(3))
+    before = (
+        ANN.batch_ids(spark, store),
+        spark.read.parquet(store + "/vectors").count(),
+        spark.read.parquet(store + "/codes").count(),
+    )
+    schema = StructType(
+        [StructField("vec_id", LongType()), StructField("embedding", ArrayType(DoubleType()))]
+    )
+    good = [float(i % 7) + 1.0 for i in range(64)]
+    batch = spark.createDataFrame(
+        [(900001, good), (900002, bad), (900003, good), (900004, good), (900005, good)], schema
+    )
+    with pytest.raises(ValueError, match=f"vec_id=900002 {why}"):
+        ANN.append_to_index(spark, store, batch)
+    after = (
+        ANN.batch_ids(spark, store),
+        spark.read.parquet(store + "/vectors").count(),
+        spark.read.parquet(store + "/codes").count(),
+    )
+    assert after == before
+
+
+def test_write_partition_replaces_the_partition(spark, tmp_path):
+    """Both seam implementations: a second write of the same batch id
+    replaces that partition's rows (dynamic overwrite), leaves the others,
+    and writes files either implementation reads back the same."""
+    import pyarrow as pa
+
+    first = pa.table({"vec_id": pa.array([1, 2], pa.int64()), "cell_id": pa.array([0, 1], pa.int32())})
+    second = pa.table({"vec_id": pa.array([3], pa.int64()), "cell_id": pa.array([5], pa.int32())})
+    got = []
+    for name, io in (
+        ("pa", ANN._ArrowStoreIO(str(tmp_path / "pa"))),
+        ("sp", ANN._SparkStoreIO(spark, str(tmp_path / "sp"))),
+    ):
+        io.write_partition("codes", 0, first)
+        io.write_partition("codes", 1, first)
+        io.write_partition("codes", 0, second)
+        rows = spark.read.parquet(str(tmp_path / name / "codes")).collect()
+        got.append(sorted((r["batch_id"], r["vec_id"], r["cell_id"]) for r in rows))
+        assert [d for d in io.listdir("codes") if not d.startswith("_")] == [
+            "batch_id=0", "batch_id=1"
+        ]
+    assert got[0] == got[1] == [(0, 3, 5), (1, 1, 0), (1, 2, 1)]
